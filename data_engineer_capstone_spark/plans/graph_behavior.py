@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import materialize
 from ..catalog import load_table
+from ..sizing import fits_broadcast
 from ._util import ntile_from_rank, round_det, sql_round_det
 from .registry import query
 
@@ -1109,15 +1110,18 @@ q342.__doc__ = q342.__doc__.format(m=PPR_SEED_MOD)
 # -------------------------------------------------- k-truss peeling -------
 KTRUSS_SUPPORT = 2  # survive iff edge sits in >= 2 triangles (4-truss)
 KTRUSS_ROUNDS = 2
-# peel sets below this row count broadcast into the triangle anti-joins
-# (2 longs/row ≈ 256 MB framed at the cap — inside the 8 GB broadcast
-# envelope); larger peels fall back to the shuffled-hash anti-join. The
-# count is free: the peel set is already eagerly materialized. Measured
-# at sf0.1 (51k removed edges): broadcast runs the three anti-joins with
+# peel sets that fit the byte budget (sizing.fits_broadcast) broadcast
+# into the triangle anti-joins; larger peels fall back to the
+# shuffled-hash anti-join. A peel row is two longs, but on the driver it
+# costs an estimated ~160 B while the collected UnsafeRows (24 B payload + object and
+# array headers) and the built two-key hash relation (key + value rows +
+# slot) coexist — so the 256 MiB budget admits ~1.7M-row peels. The count
+# is free: the peel set is already eagerly materialized. Measured at
+# sf0.1 (51k removed edges): broadcast runs the three anti-joins with
 # ZERO shuffles of the 1.88M-row triangle list (3 BroadcastHashJoin vs
 # 3 SortMergeJoin + 6 exchanges — AQE did not convert on its own because
 # checkpointed stats are unknown), 1.5 s -> 0.9 s for the filter pass.
-KTRUSS_PEEL_BROADCAST_ROWS = 16_000_000
+KTRUSS_PEEL_ROW_BYTES = 160
 
 
 def _ktruss_sql() -> str:
@@ -1206,14 +1210,14 @@ def q345(spark: SparkSession, sf: str) -> DataFrame:
             # edges appearing in a live triangle but below support: the
             # peel set. Materialized (eager, slim two-int rows) so each
             # anti-join probes a bounded build side once; count-gated
-            # broadcast (see KTRUSS_PEEL_BROADCAST_ROWS) keeps the
+            # broadcast (see KTRUSS_PEEL_ROW_BYTES) keeps the
             # triangle list out of the anti-join exchanges entirely.
             removed = materialize(
                 sup.where(F.col("s") < KTRUSS_SUPPORT).select(
                     F.col("x").alias("rx"), F.col("y").alias("ry")
                 )
             )
-            if removed.count() <= KTRUSS_PEEL_BROADCAST_ROWS:
+            if fits_broadcast(removed.count(), KTRUSS_PEEL_ROW_BYTES):
                 removed = F.broadcast(removed)
             else:  # huge peel: shuffled-hash, never sort the triangles
                 removed = removed.hint("shuffle_hash")

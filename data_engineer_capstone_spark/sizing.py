@@ -19,6 +19,15 @@ from ever REDUCING parallelism below the session's configured shuffle
 width (explicit targets are exact — AQE never widens them); the cap is
 a runaway guard for astronomically skewed histograms, far above any
 partition count a 1000-executor cluster schedules poorly.
+
+Broadcast gates are sized in BYTES, not rows: an operator that may ship
+a side to every task (a broadcast hash join's build side, a driver-built
+CSR) states what one of its rows costs on the driver and in the framed
+broadcast, and :func:`fits_broadcast` holds rows × that cost to one
+:data:`BROADCAST_BYTES` budget. The budget is a fixed constant, not a
+setting: 256 MiB keeps the collect and its transient copies a small share
+of a driver with a few GiB, and sits far below Spark's 8 GiB broadcast
+ceiling.
 """
 
 from __future__ import annotations
@@ -27,6 +36,19 @@ from pyspark.sql import SparkSession
 
 ROWS_PER_TASK = 750_000
 MAX_PARTITIONS = 65_536
+BROADCAST_BYTES = 256 * 1024 * 1024
+
+
+def broadcast_rows(bytes_per_row: int) -> int:
+    """Most rows of ``bytes_per_row`` bytes that fit :data:`BROADCAST_BYTES`
+    — the ``limit(n + 1)`` of a bounded collect that gates itself."""
+    return BROADCAST_BYTES // bytes_per_row
+
+
+def fits_broadcast(rows: int, bytes_per_row: int) -> bool:
+    """Whether ``rows`` rows of ``bytes_per_row`` bytes fit
+    :data:`BROADCAST_BYTES`."""
+    return rows <= broadcast_rows(bytes_per_row)
 
 
 def expansion_partitions(

@@ -141,6 +141,43 @@ def test_connected_components_vs_union_find(spark, edge_list):
 
 
 @settings(**SETTINGS)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 11), st.integers(0, 11)).filter(lambda e: e[0] < e[1]),
+        min_size=0,
+        max_size=30,
+        unique=True,
+    ),
+    st.integers(1, 8),
+    st.none() | st.integers(1, 4),
+)
+def test_common_neighbor_topk_kernel_vs_shuffled_plan(
+    spark, monkeypatch, edge_list, k, degree_cap
+):
+    """The broadcast-CSR common-neighbour kernel returns exactly the
+    shuffled wedge plan's top k (common desc, a, b) on random graphs over
+    12 nodes, with and without a degree cap; tiny block and task budgets
+    spread each graph over several tasks."""
+    from data_engineer_capstone_spark.plans import training_data as T
+    from data_engineer_capstone_spark.plans.training_data import (
+        common_neighbor_counts,
+        common_neighbor_topk,
+    )
+
+    monkeypatch.setattr(T, "CN_TASK_WEDGES", 4)
+    monkeypatch.setattr(T, "CN_BLOCK_WEDGES", 2)
+
+    edges = spark.createDataFrame(edge_list, "a long, b long")
+    want = (
+        common_neighbor_counts(edges, degree_cap)
+        .orderBy(F.desc("common"), "a", "b")
+        .limit(k)
+    )
+    got = common_neighbor_topk(edges, k, degree_cap)
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+
+@settings(**SETTINGS)
 @given(st.lists(st.sampled_from("abc"), min_size=0, max_size=12))
 def test_shingles_count_and_short_doc_guard(spark, toks):
     """k-shingling emits exactly max(0, n-k+1) grams pre-dedup and the

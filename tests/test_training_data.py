@@ -5,6 +5,7 @@ determinism under repartitioning, per-cluster keep-exactly-one."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineer_capstone_spark.catalog import load_table
@@ -270,24 +271,180 @@ def test_winsorize_approx_twin_close_to_exact(spark, sf_dir):
     assert abs(approx.wins_sum_cents - exact.wins_sum_cents) <= 4 * slack * spread
 
 
-def test_common_neighbor_degree_cap_drops_only_hub_wedges(spark):
+def _cn_frames(spark, edge_list, k, degree_cap=None):
+    """``common_neighbor_topk`` and its reference ``common_neighbor_counts
+    (...).orderBy(common desc, a, b).limit(k)`` over one edge list, as row
+    lists, plus whether the broadcast-CSR kernel ran."""
+    from data_engineer_capstone_spark.plans.training_data import (
+        common_neighbor_counts,
+        common_neighbor_topk,
+    )
+
+    edges = spark.createDataFrame(edge_list, "a long, b long")
+    got = common_neighbor_topk(edges, k, degree_cap)
+    ran_kernel = "MapInPandas" in got._jdf.queryExecution().executedPlan().toString()
+    want = (
+        common_neighbor_counts(edges, degree_cap)
+        .orderBy(F.desc("common"), "a", "b")
+        .limit(k)
+    )
+    rows = lambda df: [tuple(r) for r in df.collect()]  # noqa: E731
+    return rows(got), rows(want), ran_kernel
+
+
+def _force_fallback(monkeypatch):
+    """Price an edge row over the whole broadcast budget: no edge list
+    fits, so ``common_neighbor_topk`` takes the shuffled plan."""
+    from data_engineer_capstone_spark.plans import training_data as T
+    from data_engineer_capstone_spark.sizing import BROADCAST_BYTES
+
+    monkeypatch.setattr(T, "CN_EDGE_BYTES", BROADCAST_BYTES + 1)
+
+
+HUB_GRAPH = [(0, i) for i in range(1, 61)] + [  # hub 0, spokes 1..60
+    (100, 101), (100, 102), (101, 102), (101, 103)  # small clique + tail
+]
+
+
+@pytest.mark.parametrize("path", ["kernel", "fallback"])
+def test_common_neighbor_degree_cap_drops_only_hub_wedges(spark, monkeypatch, path):
     """Crafted hub graph: a star center with 60 spokes plus a small clique.
     Capped at 50, the hub stops generating wedges (its spoke pairs vanish)
-    while every wedge centered on a normal node survives unchanged."""
-    from data_engineer_capstone_spark.plans.training_data import common_neighbor_counts
+    while every wedge centered on a normal node survives unchanged — on
+    the broadcast-CSR kernel and on the shuffled fallback alike."""
+    from data_engineer_capstone_spark.plans.training_data import common_neighbor_topk
 
-    hub = [(0, i) for i in range(1, 61)]  # hub 0, spokes 1..60
-    clique = [(100, 101), (100, 102), (101, 102), (101, 103)]
-    edges = spark.createDataFrame(hub + clique, ["a", "b"])
-    full = {(r.a, r.b): r.common for r in common_neighbor_counts(edges).collect()}
-    capped = {(r.a, r.b): r.common for r in
-              common_neighbor_counts(edges, degree_cap=50).collect()}
+    if path == "fallback":
+        _force_fallback(monkeypatch)
+    edges = spark.createDataFrame(HUB_GRAPH, ["a", "b"])
+
+    def counts(cap):
+        out = common_neighbor_topk(edges, 10_000, cap)
+        return {(r.a, r.b): r.common for r in out.collect()}
+
+    full, capped = counts(None), counts(50)
     # hub-centered wedges (spoke-spoke pairs) exist only uncapped
     assert (1, 2) in full and (1, 2) not in capped
     # wedges centered on normal nodes are untouched: 102-103 via center 101
     assert full[(102, 103)] == capped[(102, 103)] == 1
     # and nothing capped is new
     assert set(capped) <= set(full)
+
+
+def _tie_graph():
+    """40 disjoint 4-cycles s–c–t–d, each giving two pairs of count 2
+    ((s, t) and (c, d)), plus three K(2,3) pairs of count 3 at the top
+    of the key range: with k = 5 the count-2 ties straddle rank k, and
+    their winners sit in the first task while the count-3 pairs sit in
+    the last one."""
+    edges = []
+    for i in range(40):
+        s, c, t, d = 10 * i, 10 * i + 1, 10 * i + 2, 10 * i + 3
+        edges += [(s, c), (s, d), (c, t), (t, d)]
+    for j in range(3):
+        u, v = 1000 + 10 * j, 1001 + 10 * j
+        edges += [(u, w) for w in (1002 + 10 * j, 1003 + 10 * j, 1004 + 10 * j)]
+        edges += [(v, w) for w in (1002 + 10 * j, 1003 + 10 * j, 1004 + 10 * j)]
+    return edges
+
+
+@pytest.mark.parametrize(
+    "edge_list,k,expect",
+    [
+        ([], 25, []),  # empty edge list: no rows, no error
+        ([(1, 2)], 25, []),  # single edge: no wedges
+        ([(a, b) for a in range(6) for b in range(a + 1, 6)], 25, []),  # clique
+        # every pair has one common neighbour; the lowest keys win
+        (HUB_GRAPH, 25, [(1, b, 1) for b in range(2, 27)]),
+        (_tie_graph(), 5, [(1000, 1001, 3), (1010, 1011, 3), (1020, 1021, 3),
+                           (0, 2, 2), (1, 3, 2)]),
+    ],
+    ids=["empty", "single_edge", "clique", "hub", "ties_across_tasks"],
+)
+def test_common_neighbor_topk_kernel_equals_shuffled_plan(
+    spark, monkeypatch, edge_list, k, expect
+):
+    """The broadcast-CSR kernel returns exactly the shuffled wedge plan's
+    ordered top k (common desc, a, b) on degenerate and tie-heavy graphs,
+    with blocks and tasks sized down so even these graphs spread over
+    every task."""
+    from data_engineer_capstone_spark.plans import training_data as T
+
+    monkeypatch.setattr(T, "CN_TASK_WEDGES", 1)
+    monkeypatch.setattr(T, "CN_BLOCK_WEDGES", 8)
+    got, want, ran_kernel = _cn_frames(spark, edge_list, k)
+    assert ran_kernel
+    assert got == want == expect
+
+
+def test_common_neighbor_topk_fallback_over_budget(spark, monkeypatch):
+    """An edge list over the broadcast budget takes the shuffled plan,
+    which gives the kernel's answer."""
+    kernel, want, ran_kernel = _cn_frames(spark, HUB_GRAPH, 25, degree_cap=50)
+    _force_fallback(monkeypatch)
+    fallback, _, ran_fallback = _cn_frames(spark, HUB_GRAPH, 25, degree_cap=50)
+    assert ran_kernel and not ran_fallback
+    assert kernel == fallback == want
+
+
+def _brute_cn(edges, k, cap):
+    """Python reference: wedge counts per pair, adjacency removed."""
+    from collections import Counter, defaultdict
+
+    nb = defaultdict(list)
+    for a, b in edges:
+        nb[a].append(b)
+        nb[b].append(a)
+    cn = Counter(
+        (x, y)
+        for ns in nb.values() if cap is None or len(ns) <= cap
+        for x in ns for y in ns if x < y
+    )
+    adj = set(edges)
+    return sorted(
+        ((a, b, c) for (a, b), c in cn.items() if (a, b) not in adj),
+        key=lambda r: (-r[2], r[0], r[1]),
+    )[:k]
+
+
+@pytest.mark.parametrize("dense", [0, 10**9], ids=["sparse", "dense"])
+def test_common_neighbor_kernel_blocks_match_brute_force(monkeypatch, dense):
+    """Driver CSR + executor kernel without Spark, against a Python wedge
+    count: both counting modes, many block cuts, shuffled block order
+    split over two batches, and multi-edges (a repeated edge multiplies
+    its wedges, as the shuffled plan's self-join does)."""
+    import random
+    import types
+
+    import numpy as np
+    import pandas as pd
+
+    from data_engineer_capstone_spark.plans import training_data as T
+
+    monkeypatch.setattr(T, "CN_DENSE", dense)
+    rng = random.Random(7)
+    for _ in range(60):
+        nn = rng.randint(1, 14)
+        pairs = [(3 * a, 3 * b) for a in range(nn) for b in range(a + 1, nn)]
+        edges = rng.sample(pairs, rng.randint(0, len(pairs)))
+        if edges and rng.random() < 0.3:
+            edges += rng.sample(edges, rng.randint(1, len(edges)))
+        k, cap = rng.randint(1, 6), rng.choice([None, 1, 3])
+        monkeypatch.setattr(T, "CN_BLOCK_WEDGES", rng.choice([1, 3, 40]))
+        csr, _ = T._cn_csr(
+            np.array([e[0] for e in edges], np.int64),
+            np.array([e[1] for e in edges], np.int64),
+            cap,
+            4,
+        )
+        ids = list(range(len(csr[-1]) - 1))
+        rng.shuffle(ids)
+        task = T._cn_task(types.SimpleNamespace(value=csr), k)
+        half = len(ids) // 2
+        out = pd.concat(task(iter([pd.DataFrame({"id": ids[:half]}),
+                                   pd.DataFrame({"id": ids[half:]})])))
+        got = sorted(zip(out.a, out.b, out.common), key=lambda r: (-r[2], r[0], r[1]))
+        assert got[:k] == _brute_cn(edges, k, cap), (edges, k, cap)
 
 
 def test_kmeans_update_step_shape(spark, sf_dir):

@@ -229,9 +229,11 @@ EXPECTED = {
     "q234_entity_resolution": {"SortMergeJoin"},  # same class (CC labels join)
     "q238_cluster_keep_best": {"SortMergeJoin"},  # same class (q108 CC labels join)
     "q268_leakage_safe_split": {"SortMergeJoin"},  # same class (CC labels join)
-    # wedge generation: the undirected edge list self-joined on the shared
+    # over the CSR broadcast budget (common_neighbor_topk's fallback) the
+    # wedges come from the undirected edge list self-joined on the shared
     # endpoint — both sides are the same O(E) relation, neither broadcasts
-    # at graph scale; keyed SMJ (or AQE shuffled-hash) is the intended plan
+    # at graph scale; keyed SMJ (or AQE shuffled-hash) is the intended
+    # plan. Under the budget the plan is Range → MapInPandas → TakeOrdered
     "q242_common_neighbors": {"SortMergeJoin"},
     "q113_curation_pipeline": {"SortMergeJoin"},  # same (components stage)
     "q114_incremental_dedup": {"SortMergeJoin"},  # same + corpus anti-join
