@@ -123,7 +123,9 @@ def parse_visitor(
     base = os.path.join(fixtures, "i94_visitor_data")
     # Explicit schemas: a schema-less multiLine JSON read runs a full
     # inference scan first — a second read of the data at scale
-    # (sources/readers.py S4 note).
+    # (sources/readers.py S4 note) — and a schema-less parquet read runs a
+    # footer-inference job per build. The SAS schema declares only the
+    # eight columns selected below; the scan prunes the rest.
     rd = lambda f, s: spark.read.schema(s).option("multiLine", "true").json(  # noqa: E731
         os.path.join(base, f)
     )
@@ -131,7 +133,11 @@ def parse_visitor(
     port = rd("i94port.json", "code string, municipality string, region string")
     visa = rd("i94visa.json", "code bigint, type string")
     df = (
-        spark.read.parquet(os.path.join(base, "sas_data", "*.parquet"))
+        spark.read.schema(
+            "cicid double, i94res double, i94port string, arrdate double, "
+            "i94visa double, i94addr string, depdate double, visatype string"
+        )
+        .parquet(os.path.join(base, "sas_data", "*.parquet"))
         .selectExpr(
             "cicid as id",
             "i94res",

@@ -13,6 +13,25 @@ every knob is chosen so the same plan shapes survive a 1000-executor cluster:
 - ``spark.sql.legacy.parquet.nanosAsLong`` — the driver's ``events`` table
   carries parquet TIMESTAMP(NANOS) which Spark refuses by default; we read
   nanos as long and convert to timestamp in the catalog (see catalog.py).
+- ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``. The
+  JVM-wide cache of Janino-compiled whole-stage-codegen classes holds
+  100 entries by default, and a workload that repeats more distinct
+  plans than that, in the same order, evicts every class before it is
+  reused. Measured working sets, in distinct classes per pass: 157 for a
+  ``star_etl`` pass of the repo benchmark, 108 for a ``queries`` pass,
+  and 652 for a bench.py headline sweep (21 keys, 4 lane keys and the
+  pipeline composite at sf0.01). With 100 entries a warm pass recompiled
+  152 (``star_etl``) and 54-60 (``queries``) classes, and bench.py's
+  second sweep 832. The JIT then compiles both the fresh classes and
+  Janino itself (29.7 s of a 40.9 CPU-s ``star_etl`` pass in JFR, 4
+  vCPUs). With 1000 entries the same warm passes compile 8, 0-4 and 12
+  classes. The residual cost is Spark's, not the cache's: every
+  whole-stage LIMIT names its counter from a JVM-wide sequence
+  (``_limit_counter_N``), so a ``head(1)`` whose limit is pushed into
+  union branches — the DQ gates on ``time`` and ``immigration_facts`` —
+  generates new source, and compiles a fresh class, on every call. Those
+  are the 8 compiles left per warm ``star_etl`` pass. Spark sizes the
+  cache once per JVM, from the session that compiles first.
 """
 
 from __future__ import annotations
@@ -20,6 +39,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# Generated-code classes the JVM keeps compiled (see the module docstring).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_parallelism() -> int:
@@ -49,6 +72,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
         # ContextCleaner only deletes reliable-checkpoint files when this is
         # true (default false), and it reads the conf at context creation —

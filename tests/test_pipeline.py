@@ -61,3 +61,26 @@ def test_worker_pipeline_reference_quirks(spark):
     # while df1 passthroughs may keep the leading space (reference semantics)
     spaced = workers.filter(workers.worksite_state.startswith(" ")).count()
     assert spaced > 0  # ' PUERTO RICO' style passthrough survives
+
+
+def test_generated_code_reused_across_builds(spark):
+    """A repeated build reuses its generated classes instead of recompiling
+    them. The JVM's codegen cache must hold one build's working set (~105
+    classes at fixture scale, over Spark's default of 100 entries). What a
+    warm build still compiles are the two union-branch LIMITs of the DQ
+    gate's head(1) on ``time`` and ``immigration_facts``: Spark names each
+    LIMIT counter from a JVM-wide sequence, so their source is new on every
+    call (4 classes each)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for _ in range(2):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        tables = build.build_all(spark)
+        gates = build.run_quality_gates(tables)
+        counts = {name: df.count() for name, df in tables.items()}
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+        for df in tables.values():
+            df.unpersist()
+        assert all(all(checks.values()) for checks in gates.values()), gates
+        assert all(counts.values()), counts
+    assert compiles[1] <= 8, f"warm build recompiled generated code: {compiles}"

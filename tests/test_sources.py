@@ -93,6 +93,71 @@ def test_parquet_source_conform_prunes_and_casts(spark, sf_dir):
     assert "n_regionkey" not in plan  # column pruned at the scan
 
 
+def _jobs_in_group(spark, group: str) -> int:
+    """Spark jobs run under ``group``, once the listener bus has caught up."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_schema_memo_skips_inference(spark, sf_dir, monkeypatch):
+    """With the table cache off, the first load of a table infers its
+    schema in a Spark job; every later load takes the schema from the
+    catalog's memo and runs no job, with the same schema and rows."""
+    from data_engineer_capstone_spark import catalog
+    from tests.oracle import rows_fingerprint
+
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_CACHE", "off")
+    monkeypatch.setattr(catalog, "_SCHEMAS", {})
+    sc = spark.sparkContext
+
+    def load(name, group):
+        sc.setJobGroup(group, group, interruptOnCancel=False)
+        try:
+            return catalog.load_table(spark, sf_dir, name)
+        finally:
+            sc.setJobGroup("", "")
+
+    for name in catalog.TABLES:
+        first = load(name, f"memo-first-{name}")
+        second = load(name, f"memo-second-{name}")
+        assert _jobs_in_group(spark, f"memo-first-{name}") >= 1, name
+        assert _jobs_in_group(spark, f"memo-second-{name}") == 0, name
+        assert second.schema == first.schema, name
+        fingerprints = [
+            rows_fingerprint(df.columns, [tuple(r) for r in df.collect()])
+            for df in (first, second)
+        ]
+        assert fingerprints[0] == fingerprints[1], name
+        if name == "events":
+            assert dict(second.dtypes)["ts"] == "timestamp_ntz"
+
+
+def test_catalog_schema_memo_sees_rewritten_file(spark, tmp_path, monkeypatch):
+    """A rewritten file gets a new memo key, so its next load infers the
+    new schema instead of reusing the old one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineer_capstone_spark import catalog
+
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_CACHE", "off")
+    monkeypatch.setattr(catalog, "_SCHEMAS", {})
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    for _ in range(2):
+        assert catalog.load_table(spark, str(tmp_path), "region").columns == [
+            "r_regionkey", "r_name"
+        ]
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"], "r_comment": ["x", "y"]}),
+        path,
+    )
+    df = catalog.load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(tuple(r) for r in df.collect()) == [(0, "A", "x"), (1, "B", "y")]
+
+
 def test_conform_fixes_type_widening(spark):
     # the reference's empty-df-union leaves ints as strings; conform casts
     df = spark.createDataFrame([("1", "a"), ("2", "b")], "id string, v string")

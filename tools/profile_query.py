@@ -2,11 +2,14 @@
 protocol, now a committed tool instead of an ad-hoc snippet).
 
 Runs ONE registered query N times in a fresh session at a given SF and
-prints: per-run wall time, and the md5 of the NORMALIZED executed plan
-(AQE final plan, expression/plan ids and temp paths stripped) for the
-first and last run. A descending time curve onto a stable floor with an
-unchanged plan hash = JIT/scheduler warm-up (environment), not plan cost;
-a changed hash or a flat-but-slower curve = a real regression.
+prints, per run: wall time, the number of Janino compiles of generated
+code (the JVM's CodegenMetrics delta) and the md5 of the NORMALIZED
+executed plan (AQE final plan, expression/plan ids and temp paths
+stripped). A descending time curve onto a stable floor with an unchanged
+plan hash and no compiles after the first run = JIT/scheduler warm-up
+(environment), not plan cost; compiles in every run = generated code
+recompiled (codegen cache too small, or source that differs per run); a
+changed hash or a flat-but-slower curve = a real regression.
 
 Usage:
     python tools/profile_query.py q30_tpch_q1_agg --runs 8
@@ -95,14 +98,20 @@ def main() -> None:
 
     spark = get_spark(app_name=f"profile-{args.name}")
     fn = get_queries()[args.name]
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     times, hashes = [], []
     for i in range(args.runs):
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount()
         t0 = time.time()
         df = fn(spark, args.sf)
         df.count() if args.count_only else df.collect()
         times.append(time.time() - t0)
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
         hashes.append(plan_md5(df))
-        print(f"run {i}: {times[-1]:.3f} s  plan md5 {hashes[-1]}", flush=True)
+        print(
+            f"run {i}: {times[-1]:.3f} s  compiles {compiled}  plan md5 {hashes[-1]}",
+            flush=True,
+        )
     timed = times[1:]
     if timed:
         stats = (
