@@ -5,19 +5,28 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
+The driver checks the head (~50 names) of the dicts' iteration order, so
+that order is the rotation. It is derived from committed records alone:
+the ``CORRECTNESS_r*.json`` files next to this module and the plan record
+``tools/plan_baseline.json`` (see :func:`rotation`).
+
 All real logic lives in the ``data_engineer_capstone_spark`` package; this
 module only adapts its query registry to the driver's interface.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from data_engineer_capstone_spark.plans import get_oracles, get_queries  # noqa: E402
 
@@ -27,346 +36,58 @@ def entry(spark: SparkSession) -> DataFrame:
     return get_queries()["q30_tpch_q1_agg"](spark, "/root/testdata/sf0.001")
 
 
-# Queries the driver already hash-verified in earlier rounds (the driver
-# takes the head of this dict's iteration order). Rotating them to the back
-# puts 50 not-yet-driver-checked queries at the head, so each round broadens
-# driver verification; the local gate (tests/test_queries.py) still verifies
-# the full registry either way.
-_DRIVER_VERIFIED_R1_R2 = (
-    "q01_full_scan", "q02_projection_arithmetic", "q03_predicates",
-    "q04_compound_gate", "q20_broadcast_code_lookup", "q21_star_join_revenue",
-    "q22_left_outer_null_probe", "q23_full_outer", "q24_left_semi",
-    "q25_left_anti", "q26_range_join", "q27_cross_join",
-    "q50_multi_col_sort_nulls", "q51_topk_limit", "q52_expr_sort",
-    "q53_union_all_vs_distinct", "q54_intersect_except", "q55_select_distinct",
-    "q56_union_alignment", "q57_pivot", "q58_unpivot", "q118_scalar_subquery",
-    "q121_antijoin_scalar_avg", "q122_banded_range_join", "q128_table_diff",
-    "q131_fuzzy_levenshtein_join", "q132_null_safe_join",
-    "q133_recursive_hierarchy", "q134_date_spine", "q157_tuple_semi_join",
-    "q158_bag_set_ops", "q159_lateral_aggregate", "q172_pareto_frontier",
-    "q30_tpch_q1_agg", "q31_having", "q32_rollup", "q33_cube",
-    "q34_grouping_sets", "q35_distinct_count_per_group",
-    "q36_minmax_strings_dates", "q107_approx_sketches", "q119_corr_cov",
-    "q125_histogram", "q127_argmax_per_group", "q130_mode_per_group",
-    "q137_exact_percentiles", "q141_share_of_total", "q142_count_distribution",
-    "q143_sorted_string_agg", "q151_group_by_all",
-)
+def correctness_records() -> dict[int, dict]:
+    """Every committed driver record, keyed by its round number."""
+    records = {}
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            records[int(re.search(r"_r(\d+)\.json$", path)[1])] = json.load(f)
+    return records
 
 
-# Round-3 driver-green additions (the CORRECTNESS_r03.json sample minus the
-# rows that changed this round — those re-front via _RECHECK_THIS_ROUND).
-_DRIVER_VERIFIED_R3 = (
-    "q224_semantic_dedup_lsh", "q225_simhash_pairs", "q226_pii_redaction",
-    "q227_domain_mix_sample", "q228_ann_ivf_pq", "q229_salted_hot_key_join",
-    "q230_asof_tolerance", "q232_fim_transform", "q233_udf_map_in_arrow",
-    "q234_entity_resolution", "q235_ivm_delta_aggregate",
-    "q236_spatial_grid_join", "q237_doc_chunking", "q238_cluster_keep_best",
-    "q239_weighted_sample", "q240_rolling_median", "q241_bigram_novelty",
-    "q242_common_neighbors", "q243_jaccard_prefix_filter",
-    "q244_vocab_coverage", "q245_embedding_quantize", "q246_column_profile",
-    "q247_winsorize", "q248_bpe_merge_step", "q249_winsorize_approx",
-    "q250_kmeans_update_step", "q251_grouped_weighted_sample", "q252_exact_auc",
-    "q152_weighted_avg", "q163_chi_square", "q164_regression_slope",
-    "q169_median_abs_deviation", "q170_lag1_autocorr", "q171_entropy",
-    "q40_row_number_topk", "q41_rank_dense_rank", "q42_lag_lead",
-    "q43_running_sum", "q44_sliding_frame_ntile", "q117_sessionize",
-    "q120_time_range_window", "q129_window_kit2", "q173_locf",
-    "q174_contribution", "q60_string_kit", "q61_split_index",
-    "q62_sas_epoch_date",
-)
-
-
-# Round-4 driver-green sample (CORRECTNESS_r04.json: 50/50 green — the
-# three HUGEINT rechecks + 47 first-time q253-q301 rows).
-_DRIVER_VERIFIED_R4 = (
-    "q160_boolean_aggregates", "q175_new_vs_returning",
-    "q231_hashed_linear_classifier", "q253_ann_ivf_exhaustive",
-    "q254_ann_ivf_pq_exhaustive", "q255_winsorize_sketch_exhaustive",
-    "q256_ngram_containment", "q257_vocab_oov_rate",
-    "q258_pmi_collocations", "q259_shard_manifest",
-    "q260_mom_revenue_growth", "q261_kcore_peel",
-    "q262_ewma_sequential_state", "q263_stream_rollup_maintenance",
-    "q264_merge_matrix", "q265_conversion_attribution",
-    "q266_langid_confusion", "q267_table_checksum",
-    "q268_leakage_safe_split", "q269_session_depth_bounce",
-    "q270_arrival_log2_histogram", "q271_weighted_median",
-    "q272_linear_interpolation", "q273_benford_check",
-    "q274_percentile_normalize", "q275_cohort_ltv_curve",
-    "q276_interval_overlap_join", "q277_ohlc_bars",
-    "q278_domain_token_overlap", "q279_embedding_gram_matrix",
-    "q280_boilerplate_strip", "q281_negative_sampling",
-    "q282_power_iteration", "q283_tfidf_topk",
-    "q285_referential_integrity", "q287_calibration_table",
-    "q288_stream_ohlc", "q289_key_skew_report",
-    "q290_domain_minhash_overlap", "q291_grouped_ols",
-    "q292_grouped_auc", "q293_minhash_merge_invariance",
-    "q294_sampled_estimate", "q295_cascade_purge_audit",
-    "q296_time_travel_consistency", "q297_pandas_api_tier",
-    "q298_cusum_changepoint", "q299_ann_lsh_exhaustive",
-    "q300_clamped_balance", "q301_point_in_time_features",
-)
-
-# Round-5 driver sample (CORRECTNESS_r05.json: 48 green + q96/q106
-# rows-only-by-design `no_oracle` — both ANN paths with exhaustive
-# hash-verified twins q299/q253 driver-green in r4).
-_DRIVER_VERIFIED_R5 = (
-    "q63_date_kit", "q64_math_kit", "q65_conditional_kit", "q66_array_kit",
-    "q67_map_struct_kit", "q68_json_kit", "q69_from_json_typed",
-    "q70_visitor_pipeline", "q71_worker_pipeline",
-    "q72_time_fact_accumulation", "q73_dq_checks", "q80_stream_tumbling",
-    "q81_stream_sliding", "q82_stream_session",
-    "q83_stream_watermark_latedrop", "q84_stream_dedup",
-    "q85_stream_stateful_running_count", "q86_stream_stream_join",
-    "q87_stream_static_join", "q90_exact_dedup", "q91_ngram_jaccard_dedup",
-    "q92_minhash_lsh_dedup", "q93_simhash", "q94_cosine_topk",
-    "q95_embedding_near_dup", "q96_ann_lsh", "q97_langid", "q98_text_stats",
-    "q99_quality_score", "q100_fingerprint", "q101_asof_join",
-    "q102_multimodal_meta", "q103_udf_scalar_pandas",
-    "q104_udaf_grouped_agg", "q105_udtf_lateral", "q106_ann_ivf",
-    "q108_near_dup_clusters", "q109_train_eval_split",
-    "q110_sequence_packing", "q111_grouped_map_zscore", "q112_gap_fill",
-    "q113_curation_pipeline", "q114_incremental_dedup",
-    "q115_stratified_sample", "q116_corpus_report",
-    "q123_window_distinct_count", "q124_token_topk", "q126_scd2_merge",
-    "q135_hof_array_kit", "q136_regexp_kit",
-)
-
-# Round-6 driver sample (CORRECTNESS_r06.json: 50/50 green — the committed
-# burn-down block q138_zorder_key .. q205_rfm_segments, first-time rows).
-_DRIVER_VERIFIED_R6 = (
-    "q138_zorder_key", "q139_quality_report", "q140_bitwise_kit",
-    "q144_date_trunc_kit", "q145_deterministic_reservoir",
-    "q146_salted_agg_equivalence", "q147_funnel", "q148_retention_cohorts",
-    "q149_map_kit", "q150_posexplode_tokens", "q153_merge_intervals",
-    "q154_time_weighted_avg", "q155_l2_normalize", "q156_label_centroids",
-    "q161_try_kit", "q162_string_kit2", "q165_zscore_outliers",
-    "q166_missing_ids", "q167_kmeans_assign_step", "q168_bm25",
-    "q176_variant_json", "q177_collated_compare", "q178_approx_top_k",
-    "q179_listagg_ansi", "q180_pipe_syntax", "q181_from_xml",
-    "q182_interval_arithmetic", "q183_tpch_q2_min_cost_supplier",
-    "q184_tpch_q3_shipping_priority", "q185_tpch_q4_late_order_priority",
-    "q186_tpch_q5_local_supplier_volume", "q187_tpch_q6_revenue_forecast",
-    "q188_tpch_q7_volume_shipping", "q189_tpch_q8_market_share",
-    "q190_tpch_q9_product_profit", "q191_tpch_q10_returned_items",
-    "q192_tpch_q12_shipping_delay_priority", "q193_tpch_q14_promo_revenue",
-    "q194_tpch_q15_top_supplier", "q195_tpch_q16_supplier_part_counts",
-    "q196_tpch_q18_large_volume_customers",
-    "q197_tpch_q19_disjunctive_predicates", "q198_tpch_q20_promo_suppliers",
-    "q199_tpch_q21_waiting_suppliers", "q200_pagerank_two_rounds",
-    "q201_triangle_count", "q202_degree_distribution",
-    "q203_association_rules", "q204_markov_transitions", "q205_rfm_segments",
-)
-
-# Round-7 driver sample (CORRECTNESS_r07.json: 49 green + q208
-# rows-only-by-design `no_oracle` — HLL sketch union, pinned by its
-# deterministic-registers twin q331, driver-green in the same sample).
-_DRIVER_VERIFIED_R7 = (
-    "q206_ab_test_zscore", "q207_top_event_paths", "q208_hll_sketch_union",
-    "q209_incremental_rollup_merge", "q210_equi_depth_histogram",
-    "q211_preagg_below_join", "q212_repetition_score",
-    "q213_boilerplate_shingles", "q214_decontamination",
-    "q215_cdc_latest_wins", "q216_inverted_index",
-    "q217_aggregate_filter_clause",
-    "q218_equi_depth_histogram_distributed", "q219_semantic_dedup_onehop",
-    "q220_unigram_surprisal", "q221_asof_forward", "q222_salted_hot_key_agg",
-    "q223_near_dup_clusters_star", "q302_late_dimension_replay",
-    "q303_target_encoding_loo", "q304_subtree_rollup",
-    "q305_matryoshka_overlap", "q306_slo_burn_rate",
-    "q307_abc_classification", "q308_neyman_allocation",
-    "q309_ks_two_sample", "q310_gini_coefficient", "q311_sequence_pattern",
-    "q312_position_attribution", "q313_halfsample_ci", "q314_seasonal_index",
-    "q315_decayed_popularity", "q316_sorted_neighborhood_pairs",
-    "q317_silhouette_score", "q318_reshard_plan", "q319_bloom_segment_index",
-    "q320_trailing_leaderboard", "q321_blocking_recall_report",
-    "q322_count_min_sketch", "q323_fd_discovery", "q324_bfs_shortest_path",
-    "q325_rrf_fusion", "q326_spearman_drift", "q327_expanding_cv_splits",
-    "q328_mutual_information", "q329_stream_incremental_dedup",
-    "q330_cogroup_pandas", "q331_hll_registers_deterministic",
-    "q332_frequent_itemset_pairs", "q333_stream_stream_left_outer",
-)
-
-# Round-8 driver sample (CORRECTNESS_r08.json: 50/50 green — the committed
-# burn-down block q334_skyline_pareto .. q383_zorder_locality_audit,
-# first-time rows, 0 red).
-_DRIVER_VERIFIED_R8 = (
-    "q334_skyline_pareto", "q335_triangle_count",
-    "q336_clustering_coefficient", "q337_mad_outliers",
-    "q338_nearest_centroid_confusion", "q339_dbscan_grid",
-    "q340_hll_by_group", "q341_zipf_slope", "q342_personalized_pagerank",
-    "q343_golden_record_survivorship", "q344_dedup_signal_agreement",
-    "q345_ktruss_peel", "q346_kaplan_meier", "q347_readability",
-    "q348_cuped_variance_reduction", "q349_caliper_matching",
-    "q350_difference_in_differences", "q351_dedup_savings_report",
-    "q352_apply_in_arrow", "q353_uplift_deciles",
-    "q354_dynamic_gap_sessions", "q355_stream_dynamic_sessions",
-    "q356_windowed_stream_join", "q357_inclusion_dependencies",
-    "q358_set_overlap_upset", "q359_wasserstein_drift",
-    "q360_cohens_kappa", "q361_theil_sen_slope", "q362_average_precision",
-    "q363_ndcg_popularity", "q364_fifo_allocation",
-    "q365_systematic_pps_sample", "q366_k_anonymity_audit",
-    "q367_dag_longest_path", "q368_event_runs_rle", "q369_raking_ipf",
-    "q370_rank_biased_overlap", "q371_forecast_backtest",
-    "q372_label_noise_knn", "q373_peak_concurrency", "q374_boruvka_round",
-    "q375_apportionment", "q376_merkle_range_diff",
-    "q377_constrained_funnel", "q378_kendall_tau",
-    "q379_market_concentration", "q380_kmv_theta_anotb",
-    "q381_mutual_nn_pairs", "q382_cm_join_size",
-    "q383_zorder_locality_audit",
-)
-
-# Round-9 driver sample (CORRECTNESS_r09.json: 50/50 green — the final 29
-# first-time rows q384_hellinger_drift .. q412_seasonal_strength, which
-# completed the board, plus a 21-row refresh of q01-q58 names already in
-# _DRIVER_VERIFIED_R1_R2).
-_DRIVER_VERIFIED_R9 = (
-    "q384_hellinger_drift", "q385_lead_lag_xcorr", "q386_cell_suppression",
-    "q387_sql_udf_kit", "q388_hits_hubs_authorities",
-    "q389_bellman_ford_sssp", "q390_binary_segmentation",
-    "q391_shapley_attribution", "q392_watermark_lag_audit",
-    "q393_bom_explosion", "q394_profile_diff_contract",
-    "q395_isotonic_calibration", "q396_woe_information_value",
-    "q397_winnowing_pairs", "q398_consistent_hashing",
-    "q399_harmonic_centrality", "q400_phrase_search", "q401_srm_check",
-    "q402_dwell_time_transitions", "q403_lorenz_curve",
-    "q404_quantile_treatment_effects", "q405_bitemporal_asof",
-    "q406_backfill_plan", "q407_price_volume_mix",
-    "q408_ljung_box_portmanteau", "q409_covariate_shift_ess",
-    "q410_nested_percentiles", "q411_expected_calibration_error",
-    "q412_seasonal_strength",
-)
-
-# Round-12 recheck head: every query whose PLAN (or Arrow-kernel
-# interior) changed in optimization round 2 AFTER its latest driver row —
-# the full consumer closure of the round's operator changes (k-truss
-# materialize-and-decrement: q345; winnowing hot-key pair split: q397;
-# the batched einsum rescore kernel in lsh/ivf/ivf-pq ANN:
-# q96/q106/q228/q253/q254/q299; the cosine_pairs / brute_force_topk
-# single-step norm division + finite-mask + bounded-collect guard:
-# q94/q95/q219/q344; the `_edges`/`_weighted_edge_counts` aggregate
-# derivations shared by the co-purchase graph family:
-# q200/q201/q202/q242/q261/q324/q335/q336/q342/q367/q374/q389/q399) —
-# plus the
-# two never-resampled rows-only rows the round-11 VERDICT asked to
-# refresh (q107/q208). All hash-verified tri-SF locally this round
-# (committed driver-sim sweep logs in artifacts/), but the driver row
-# is the ground truth — they front the rotation ahead of the freshness
-# refresh below.
-# (Round-11 recheck head was the 16-query GEMM/shingle closure —
-# driver-green in CORRECTNESS_r11.json.)
-_RECHECK_THIS_ROUND = (
-    "q345_ktruss_peel",
-    "q397_winnowing_pairs",
-    "q96_ann_lsh",
-    "q106_ann_ivf",
-    "q228_ann_ivf_pq",
-    "q253_ann_ivf_exhaustive",
-    "q254_ann_ivf_pq_exhaustive",
-    "q299_ann_lsh_exhaustive",
-    "q94_cosine_topk",
-    "q95_embedding_near_dup",
-    "q219_semantic_dedup_onehop",
-    "q344_dedup_signal_agreement",
-    "q200_pagerank_two_rounds",
-    "q201_triangle_count",
-    "q202_degree_distribution",
-    "q242_common_neighbors",
-    "q261_kcore_peel",
-    "q324_bfs_shortest_path",
-    "q335_triangle_count",
-    "q336_clustering_coefficient",
-    "q342_personalized_pagerank",
-    "q367_dag_longest_path",
-    "q374_boruvka_round",
-    "q389_bellman_ford_sssp",
-    "q399_harmonic_centrality",
-    "q107_approx_sketches",
-    "q208_hll_sketch_union",
-)
-
-# SURVEY §2.9 declared-core numeric range: scalar kits (q63-q69), the
-# reference pipeline end-to-end (q70-q73), streaming (q80-q87), and the
-# dedup/curation north star (q90-q116). These front the rotation ahead of
-# everything else until driver-green.
-_CORE_LO, _CORE_HI = 63, 116
+def plan_rounds() -> dict[str, int]:
+    """Per query, the first driver round that can see its current plan."""
+    with open(os.path.join(_ROOT, "tools", "plan_baseline.json")) as f:
+        return {name: rec["round"] for name, rec in json.load(f).items()}
 
 
 def _qnum(name: str) -> int:
     return int(name.split("_", 1)[0][1:])
 
 
+def rotation(
+    names: Iterable[str], records: dict[int, dict], plan_round: dict[str, int]
+) -> list[str]:
+    """Order ``names`` for the driver sample.
+
+    A name's staleness is the last round in which it has a passing row
+    (``hash_match`` true, or the rows-only ``err == "no_oracle"``); a name
+    with no passing row gets round 0. Names whose plan round is later than
+    their staleness (the plan changed after the last passing row) come
+    first; then staleness, oldest first; then query number.
+    """
+    last: dict[str, int] = {}
+    for rnd, record in records.items():
+        for name, row in record.items():
+            if row.get("hash_match") is True or row.get("err") == "no_oracle":
+                last[name] = max(last.get(name, 0), rnd)
+
+    def key(name: str) -> tuple[bool, int, int]:
+        stale = last.get(name, 0)
+        return (plan_round.get(name, 0) <= stale, stale, _qnum(name))
+
+    return sorted(names, key=key)
+
+
 def _rotate(reg: dict) -> dict:
-    """Plan-changed rechecks first, then the stalest driver block, then the
-    rest in staleness order.
-
-    BURN-DOWN SCHEDULE (committed round 5; the driver samples ~50/round):
-    rounds 5-9 are DONE — CORRECTNESS_r05..r09 are 0-red, and every name is
-    folded into a ``_DRIVER_VERIFIED_R{N}`` tuple. Round 9 completed the
-    board: all 376 registered queries now carry a driver row (369 green +
-    7 rows-only-by-design, 0 red ever).
-
-    FRESHNESS SCHEDULE (from round 10, VERDICT r9 ask #1): with no
-    never-checked backlog left, each round's ~50-row sample becomes a
-    re-verification pass —
-
-    1. ``_RECHECK_THIS_ROUND`` leads: queries whose plans changed after
-       their latest driver row (local tri-SF hash sweeps are the commit
-       gate for such changes, but the driver row is the ground truth this
-       process runs on). Round 12 fronts the 25-query consumer closure of
-       optimization round 2's operator changes (including the `_edges`
-       graph-family derivation rewrite) plus the two never-resampled
-       rows-only rows VERDICT r11 asked to refresh (q107/q208).
-    2. The STALEST driver block follows — the r4-era rows were refreshed
-       by the round-11 driver block (CORRECTNESS_r11.json 49/50 green,
-       1 no-oracle-by-design), so round 12 fronts the r5-era block
-       (``_DRIVER_VERIFIED_R5``); the ~50-row sample covers the 27
-       rechecks plus the head of that block.
-    3. The tail orders the remaining blocks stalest-first (r6, r7, r8,
-       then the r9-refreshed r1/r2 names, r9, the r10-refreshed r3
-       names, and finally the r11-refreshed r4 names) so subsequent
-       rounds keep rotating through the board oldest-evidence-first.
-
-    Optional SPARK_GRAFT_QUERY_SUBSET (comma-separated names) narrows to
-    an explicit subset. Registry growth remains FROZEN — the rotation is a
-    permutation of the registry, pinned by tests/test_registry_counts.py."""
+    """Optional SPARK_GRAFT_QUERY_SUBSET (comma-separated names) narrows to
+    an explicit subset in the given order; otherwise :func:`rotation`."""
     subset = os.environ.get("SPARK_GRAFT_QUERY_SUBSET")
     if subset:
         want = [s.strip() for s in subset.split(",") if s.strip()]
         return {k: reg[k] for k in want if k in reg}
-    verified = (
-        _DRIVER_VERIFIED_R1_R2
-        + _DRIVER_VERIFIED_R3
-        + _DRIVER_VERIFIED_R4
-        + _DRIVER_VERIFIED_R5
-        + _DRIVER_VERIFIED_R6
-        + _DRIVER_VERIFIED_R7
-        + _DRIVER_VERIFIED_R8
-        + _DRIVER_VERIFIED_R9
-    )
-    seen = set(verified)
-    # safety net: anything never driver-checked still leads everything
-    # (empty since round 9 completed the board)
-    never = [k for k in reg if k not in seen]
-    core = sorted(
-        (k for k in never if _CORE_LO <= _qnum(k) <= _CORE_HI), key=_qnum
-    )
-    rest = sorted(
-        (k for k in never if not (_CORE_LO <= _qnum(k) <= _CORE_HI)),
-        key=_qnum,
-    )
-    stale_order = (
-        _RECHECK_THIS_ROUND
-        + _DRIVER_VERIFIED_R5
-        + _DRIVER_VERIFIED_R6
-        + _DRIVER_VERIFIED_R7
-        + _DRIVER_VERIFIED_R8
-        + _DRIVER_VERIFIED_R1_R2
-        + _DRIVER_VERIFIED_R9
-        + _DRIVER_VERIFIED_R3
-        + _DRIVER_VERIFIED_R4
-    )
-    out = {k: reg[k] for k in core + rest}
-    out.update({k: reg[k] for k in stale_order if k in reg and k not in out})
-    return out
+    order = rotation(reg, correctness_records(), plan_rounds())
+    return {k: reg[k] for k in order}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

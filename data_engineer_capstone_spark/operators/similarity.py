@@ -43,8 +43,17 @@ def _rounded_cosine(a, b):
 BOUNDED_SIDE_MAX_ROWS = 8_000_000
 
 
-def _check_bounded_side(df: DataFrame, id_col: str, operator: str) -> None:
-    probe = df.select(id_col).limit(BOUNDED_SIDE_MAX_ROWS + 1).count()
+def _bounded_side(
+    df: DataFrame, id_col: str, vec_col: str, operator: str
+) -> DataFrame:
+    """The (id, vector) rows the GEMM interior collects — null ids and
+    null vectors dropped — after checking that they fit the bound. The
+    probe counts this same projection, so rows the collect would drop
+    never count against BOUNDED_SIDE_MAX_ROWS."""
+    side = df.select(id_col, vec_col).where(
+        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
+    )
+    probe = side.limit(BOUNDED_SIDE_MAX_ROWS + 1).count()
     if probe > BOUNDED_SIDE_MAX_ROWS:
         raise ValueError(
             f"{operator}: bounded side exceeds BOUNDED_SIDE_MAX_ROWS="
@@ -52,6 +61,7 @@ def _check_bounded_side(df: DataFrame, id_col: str, operator: str) -> None:
             "interior is for bounded exact workloads — use the bucketed "
             "scale path (lsh_ann_topk / ivf_ann_topk) instead"
         )
+    return side
 
 
 def _batch_rounded_cosine(
@@ -125,6 +135,12 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
+    Only finite scores rank: a candidate with a null vector or a zero norm
+    has no cosine and is never returned. A query with fewer than ``k``
+    finite-scored candidates therefore returns fewer than ``k`` rows (all
+    of its finite-scored candidates), not ``k`` rows padded with unscored
+    ones.
+
     Round-11 interior (the §A `cosine_pairs` GEMM pattern, completing the
     embedding family): the bounded QUERY side is collected once and
     broadcast as a float64 matrix + norms — the same bound the previous
@@ -146,7 +162,7 @@ def brute_force_topk(
     them (null join column / null cosine never ranked in the top k of a
     non-degenerate corpus; pinned by the q94 oracle tri-SF). Round 12
     (ADVICE r11): the bounded-collect contract is an executable guard
-    (``_check_bounded_side``), non-finite scores (zero-norm degenerate
+    (``_bounded_side``), non-finite scores (zero-norm degenerate
     vectors — the old Catalyst path scored them NULL, which desc-sorts
     LAST) are masked out of the per-batch top-k instead of letting
     numpy's NaN float win Spark's desc ordering, and the norm division
@@ -157,11 +173,7 @@ def brute_force_topk(
 
     from .dedup import _spread
 
-    _check_bounded_side(queries, id_col, "brute_force_topk")
-    qrows = [
-        r for r in queries.select(id_col, vec_col).collect()
-        if r[0] is not None and r[1] is not None
-    ]
+    qrows = _bounded_side(queries, id_col, vec_col, "brute_force_topk").collect()
     spark = queries.sparkSession
     qid_dt = queries.schema[id_col].dataType.simpleString()
     cid_dt = candidates.schema[id_col].dataType.simpleString()
@@ -265,7 +277,7 @@ def cosine_pairs(
     Null rows (id or vector) are excluded on both sides, exactly as the
     old join dropped them (null join key / null cos_sim never passed the
     threshold filter). Round 12 (ADVICE r11): the bounded-collect
-    contract is an executable guard (``_check_bounded_side``),
+    contract is an executable guard (``_bounded_side``),
     non-finite scores (zero-norm degenerate vectors — NULL under
     Catalyst, which never passes the threshold) are masked, and the norm
     division is the single-step ``d / (|a|·|b|)`` matching the Catalyst
@@ -274,11 +286,7 @@ def cosine_pairs(
 
     from .dedup import _spread
 
-    _check_bounded_side(df, id_col, "cosine_pairs")
-    rows = [
-        r for r in df.select(id_col, vec_col).collect()
-        if r[0] is not None and r[1] is not None
-    ]
+    rows = _bounded_side(df, id_col, vec_col, "cosine_pairs").collect()
     id_dt = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_dt}, id_b {id_dt}, cos_sim double"
     spark = df.sparkSession

@@ -49,11 +49,14 @@ def test_cluster_by_gives_disjoint_file_ranges(spark, tmp_path):
 
 def test_plan_exchange_counts_do_not_regress(spark):
     """Explain-plan regression gate: every batch query's static-plan
-    exchange count must not EXCEED the committed baseline
-    (tools/plan_baseline.json). An exchange that appears between rounds is
+    exchange count must not EXCEED the ``exchanges`` field of its entry in
+    the committed plan record (tools/plan_baseline.json, one
+    ``{"exchanges", "md5", "round"}`` entry per query: ``md5`` is the
+    normalized plan md5 and ``round`` the first driver round that can see
+    that plan). An exchange that appears between rounds is
     an accidental shuffle — the class of regression this repo's round-4
     explode-symmetrization sweep removed (q200 27->17, q224's doubled LSH
-    pass). Improvements (fewer exchanges) pass; refresh the baseline
+    pass). Improvements (fewer exchanges) pass; refresh the record
     deliberately with `python tools/audit_plans.py --write-baseline`.
     Red-flag operators are asserted here too, so the auditor's contract
     runs in CI, not only by hand."""
@@ -71,10 +74,10 @@ def test_plan_exchange_counts_do_not_regress(spark):
     # pinned to sf0.01 — the SF the baseline was recorded at: static size
     # estimates feed join-strategy choice, so counts are only comparable
     # at the same SF
-    for name, exch, flags in audit(spark, "/root/testdata/sf0.01"):
+    for name, exch, flags, _ in audit(spark, "/root/testdata/sf0.01"):
         if flags:
             flagged.append((name, flags))
-        base = baseline.get(name)
+        base = baseline.get(name, {}).get("exchanges")
         if base is None:
             regressions.append((name, "NOT IN BASELINE — rerun --write-baseline"))
         elif exch > base:
@@ -358,46 +361,52 @@ def test_stage_skew_clamped_bucket(monkeypatch):
     assert sk["flags"] == ["read:median~0"]
 
 
+def _fake_plan_df(plan: str):
+    """Stand-in for a DataFrame whose executed plan prints as ``plan``."""
+    from types import SimpleNamespace as NS
+
+    executed = NS(toString=lambda: plan)
+    qe = NS(executedPlan=lambda: executed)
+    return NS(_jdf=NS(queryExecution=lambda: qe))
+
+
 def test_plan_normalizer_offset_map_anchor():
     """ADVICE r8: the offset-map normalizer matches any consecutive key
     list via the [_pid#x] anchor, and leaves genuine data maps alone."""
     from tools.profile_query import normalized_plan
-
-    class _FakeExec:
-        def __init__(self, s):
-            self._s = s
-
-        def executedPlan(self):
-            return self
-
-        def toString(self):
-            return self._s
-
-    class _FakeDF:
-        def __init__(self, s):
-            self._jdf = self
-
-            class _QE:
-                def __init__(self, s2):
-                    self._e = _FakeExec(s2)
-
-                def queryExecution(self):
-                    return self._e
-
-            self._qe = _QE(s)
-
-        def queryExecution(self):
-            return self._qe.queryExecution()
 
     # 2-key offset map (the <=3-key shape the old regex missed)
     plan_in = (
         "Project [map(keys: [0,1], values: [0,188])[_pid#38] AS rnk#9L, "
         "map(keys: [0,1,2], values: [CA,NY,TX])[code#4] AS state#5]"
     )
-    out = normalized_plan(_FakeDF(plan_in))
+    out = normalized_plan(_fake_plan_df(plan_in))
     assert "map(keys: [PIDS], values: [OFFSETS])[_pid#x]" in out
     # the genuine data map (consecutive int keys, non-_pid lookup) survives
     assert "values: [CA,NY,TX]" in out
+
+
+def test_plan_normalizer_distinct_group_order():
+    """Two DISTINCT aggregates rewritten into one Expand: Spark may number
+    the distinct groups in either order from run to run (hash-map order on
+    expression ids). Both numberings hash alike; a real change in those
+    lines still moves the md5."""
+    from tools.profile_query import plan_md5
+
+    def plan(first, second, agg="count"):
+        return "\n".join([
+            "HashAggregate(keys=[day#1L], functions=["
+            f"{agg}(x#2L) FILTER (WHERE (gid#3 = {1 if first == 'x' else 2})), "
+            f"{agg}(y#4L) FILTER (WHERE (gid#3 = {1 if first == 'y' else 2}))])",
+            f"+- Expand [[day#1L, {first}#5L, null, 1], "
+            f"[day#1L, null, {second}#6L, 2]], "
+            f"[day#1L, {first}#5L, {second}#6L, gid#3]",
+            "   +- Scan [day#1L, x#5L, y#6L]",
+        ])
+
+    md5 = plan_md5(_fake_plan_df(plan("x", "y")))
+    assert plan_md5(_fake_plan_df(plan("y", "x"))) == md5
+    assert plan_md5(_fake_plan_df(plan("x", "y", agg="sum"))) != md5
 
 
 def test_gemm_cosine_twin_matches_hof_path(spark):
@@ -625,6 +634,34 @@ def test_bounded_side_guard_raises(spark, monkeypatch):
     monkeypatch.setattr(sim, "BOUNDED_SIDE_MAX_ROWS", 32)
     assert sim.cosine_pairs(df, threshold=0.99).count() > 0
     assert sim.brute_force_topk(df.limit(2), df, k=2).count() == 4
+    # the probe counts what the collect keeps: exactly `cap` valid rows
+    # plus null-vector and null-id rows is within the bound
+    monkeypatch.setattr(sim, "BOUNDED_SIDE_MAX_ROWS", 8)
+    padded = df.where("vec_id < 8").unionByName(
+        spark.createDataFrame(
+            [(100 + i, None) for i in range(5)] + [(None, [1.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        )
+    )
+    assert sim.cosine_pairs(padded, threshold=0.99).count() > 0
+    assert sim.brute_force_topk(padded, df, k=2).count() == 16
+
+
+def test_brute_topk_fewer_than_k_finite_candidates(spark):
+    """brute_force_topk's contract: a query with fewer than k finite-scored
+    candidates returns fewer than k rows — zero-norm candidates have no
+    cosine and never fill the remaining ranks."""
+    from data_engineer_capstone_spark.operators.similarity import brute_force_topk
+
+    schema = "vec_id long, embedding array<double>"
+    queries = spark.createDataFrame([(0, [1.0, 0.0])], schema)
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 1.0]), (2, [0.0, 1.0])]
+        + [(i, [0.0, 0.0]) for i in (3, 4, 5)],
+        schema,
+    )
+    rows = brute_force_topk(queries, corpus, k=4).collect()
+    assert sorted((r.candidate_id, r.rank) for r in rows) == [(1, 1), (2, 2)]
 
 
 def test_edges_aggregate_derivation_matches_join_twin(spark):

@@ -1,13 +1,18 @@
 """Guards against doc/registry drift (VERDICT r4 ask #5: the README's
-query counts drifted twice during round 4) and against rotation-table
-mistakes in ``__spark_entry__.py`` (names that fell out of the registry,
-duplicates across the verified tuples, or a rotation that drops queries).
+query counts drifted twice during round 4) and on the driver rotation in
+``__spark_entry__.py`` (derived from the committed CORRECTNESS records and
+the plan record: a permutation of the registry, plan-moved names first,
+then stalest first).
 """
 
 from __future__ import annotations
 
 import os
 import re
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from data_engineer_capstone_spark.plans import get_oracles, get_queries
 
@@ -31,172 +36,96 @@ def test_readme_counts_match_registry():
     )
 
 
-def test_rotation_tables_consistent():
+# driver rows: the two passing kinds (value-hash match, rows-only-by-design
+# `no_oracle`) and two failing ones
+_ROWS = st.sampled_from([
+    {"hash_match": True, "err": None},
+    {"hash_match": None, "err": "no_oracle"},
+    {"hash_match": False, "err": None},
+    {"hash_match": None, "err": "timeout"},
+])
+
+
+def _staleness(names, records):
+    last = dict.fromkeys(names, 0)
+    for rnd, record in records.items():
+        for name, row in record.items():
+            if row["hash_match"] is True or row["err"] == "no_oracle":
+                last[name] = max(last[name], rnd)
+    return last
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_rotation_orders_fronted_then_stalest(data):
+    """The rotation is a permutation of the registry: names whose plan
+    round is later than their last passing row come first, staleness never
+    decreases after them, and ties go by query number."""
     import __spark_entry__ as entry
 
-    reg = get_queries()
-    verified = (
-        entry._DRIVER_VERIFIED_R1_R2
-        + entry._DRIVER_VERIFIED_R3
-        + entry._DRIVER_VERIFIED_R4
-        + entry._DRIVER_VERIFIED_R5
-        + entry._DRIVER_VERIFIED_R6
-        + entry._DRIVER_VERIFIED_R7
-        + entry._DRIVER_VERIFIED_R8
-        + entry._DRIVER_VERIFIED_R9
-    )
-    # every verified name must still exist in the registry
-    missing = [n for n in verified if n not in reg]
-    assert not missing, f"verified names missing from registry: {missing}"
-    # no duplicates across the verified tuples
-    assert len(verified) == len(set(verified))
-    # the board is complete: every registered query is driver-verified
-    assert set(verified) == set(reg), (
-        f"board no longer complete: {set(reg) - set(verified)} never checked"
-    )
-    # recheck names must be re-fronts of verified queries, not strays
-    stray = [n for n in entry._RECHECK_THIS_ROUND if n not in reg]
-    assert not stray, f"recheck names missing from registry: {stray}"
-    # the rotation is a permutation of the registry (nothing dropped/added)
-    rotated = entry.queries()
-    assert set(rotated) == set(reg)
-    assert len(rotated) == len(reg)
+    qnums = data.draw(st.sets(st.integers(1, 999), max_size=40))
+    names = [f"q{n:02d}_x" for n in qnums]
+    pick = st.sampled_from(names) if names else st.nothing()
+    records = data.draw(st.dictionaries(
+        st.integers(1, 15), st.dictionaries(pick, _ROWS), max_size=6
+    ))
+    plan_round = data.draw(st.dictionaries(pick, st.integers(0, 16)))
+
+    order = entry.rotation(names, records, plan_round)
+    assert sorted(order) == sorted(names) and len(order) == len(names)
+    stale = _staleness(names, records)
+    fronted = [plan_round.get(n, 0) > stale[n] for n in order]
+    assert fronted == sorted(fronted, reverse=True)
+    keys = [(not f, stale[n], entry._qnum(n)) for f, n in zip(fronted, order)]
+    assert keys == sorted(keys)
 
 
-def test_verified_r5_matches_driver_record():
-    """_DRIVER_VERIFIED_R5 must be exactly the CORRECTNESS_r05.json sample
-    (folding in a name the driver never checked would skip its turn)."""
+def test_rotation_head_derived_from_committed_records():
+    """The committed rotation: same keys as the registry and the oracle set,
+    and its order follows from the CORRECTNESS_r*.json files and the plan
+    record alone — the fronted names lead, then the stalest rows, and the
+    ~50-name driver sample re-checks nothing the newest record covered
+    unless its plan moved since."""
+    import glob
     import json
 
     import __spark_entry__ as entry
 
-    path = os.path.join(_ROOT, "CORRECTNESS_r05.json")
-    with open(path) as f:
-        record = json.load(f)
-    assert set(entry._DRIVER_VERIFIED_R5) == set(record)
+    reg, oracles = get_queries(), get_oracles()
+    order = list(entry.queries())
+    assert set(order) == set(reg) and len(order) == len(reg)
+    assert list(entry.oracle_sql()) == [n for n in order if n in oracles]
+    assert set(entry.oracle_sql()) == set(oracles)
+
+    records = {}
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            records[int(re.search(r"_r(\d+)\.json$", path)[1])] = json.load(f)
+    with open(os.path.join(_ROOT, "tools", "plan_baseline.json")) as f:
+        plan_round = {n: rec["round"] for n, rec in json.load(f).items()}
+    stale = _staleness(reg, records)
+    fronted = {n for n in reg if plan_round.get(n, 0) > stale[n]}
+    assert set(order[: len(fronted)]) == fronted
+    rest = [stale[n] for n in order[len(fronted):]]
+    assert rest == sorted(rest)
+    newest = records[max(records)]
+    assert not [n for n in order[:50] if n in newest and n not in fronted]
 
 
-def test_verified_r6_matches_driver_record():
-    """_DRIVER_VERIFIED_R6 must be exactly the CORRECTNESS_r06.json sample."""
-    import json
+@pytest.fixture
+def bench(monkeypatch):
+    """``import bench`` sets SPARK_GRAFT_TABLE_CACHE=off as a side effect;
+    registering the variable with monkeypatch first restores the caller's
+    value (or its absence) when the test ends."""
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_CACHE", "off")
+    import bench
 
-    import __spark_entry__ as entry
-
-    path = os.path.join(_ROOT, "CORRECTNESS_r06.json")
-    with open(path) as f:
-        record = json.load(f)
-    assert set(entry._DRIVER_VERIFIED_R6) == set(record)
-
-
-def test_verified_r7_matches_driver_record():
-    """_DRIVER_VERIFIED_R7 must be exactly the CORRECTNESS_r07.json sample."""
-    import json
-
-    import __spark_entry__ as entry
-
-    path = os.path.join(_ROOT, "CORRECTNESS_r07.json")
-    with open(path) as f:
-        record = json.load(f)
-    assert set(entry._DRIVER_VERIFIED_R7) == set(record)
+    return bench
 
 
-def test_verified_r8_matches_driver_record():
-    """_DRIVER_VERIFIED_R8 must be exactly the CORRECTNESS_r08.json sample."""
-    import json
-
-    import __spark_entry__ as entry
-
-    path = os.path.join(_ROOT, "CORRECTNESS_r08.json")
-    with open(path) as f:
-        record = json.load(f)
-    assert set(entry._DRIVER_VERIFIED_R8) == set(record)
-
-
-def test_verified_r9_matches_driver_record():
-    """_DRIVER_VERIFIED_R9 must be exactly the first-time names of the
-    CORRECTNESS_r09.json sample — the record also carried a 21-row refresh
-    of names already pinned in _DRIVER_VERIFIED_R1_R2."""
-    import json
-
-    import __spark_entry__ as entry
-
-    path = os.path.join(_ROOT, "CORRECTNESS_r09.json")
-    with open(path) as f:
-        record = set(json.load(f))
-    r1r2 = set(entry._DRIVER_VERIFIED_R1_R2)
-    assert set(entry._DRIVER_VERIFIED_R9) == record - r1r2
-    # every refresh row must be a name already pinned in the r1/r2 tuple
-    assert (record - set(entry._DRIVER_VERIFIED_R9)) <= r1r2
-
-
-def test_rotation_head_is_r12_recheck_plus_stalest_block():
-    """Round-12 rotation pin: the driver sample (head ~50) must lead with
-    the consumer closure of optimization round 2's operator changes
-    (k-truss materialize-and-decrement, winnowing hot-key split, batched
-    einsum ANN rescore, cosine GEMM single-step division + guard) plus
-    the two never-resampled rows-only rows — every plan/kernel that
-    changed after its latest driver row — followed by the stalest driver
-    evidence, the r5-era block (the r4 block was refreshed by the
-    round-11 driver sample, CORRECTNESS_r11.json)."""
-    import __spark_entry__ as entry
-
-    rotated = list(entry.queries())
-    recheck = list(entry._RECHECK_THIS_ROUND)
-    assert len(recheck) == 27
-    assert rotated[: len(recheck)] == recheck
-    r5 = [n for n in entry._DRIVER_VERIFIED_R5 if n not in recheck]
-    assert rotated[len(recheck): len(recheck) + len(r5)] == r5
-    # the 50-row driver sample covers every plan-changed recheck plus the
-    # head of the stalest (r5) block
-    head = set(rotated[:50])
-    assert set(recheck) <= head
-    # the r11-refreshed r4 block now sits at the rotation tail
-    r4_positions = [rotated.index(n) for n in entry._DRIVER_VERIFIED_R4
-                    if n not in recheck]
-    assert min(r4_positions) >= len(rotated) - len(entry._DRIVER_VERIFIED_R4)
-
-
-def test_r12_recheck_covers_changed_operator_consumers():
-    """Every registered consumer of the operators whose plans or Arrow
-    kernels changed in round 12 (q345's loop, q397's pair generation,
-    the ANN rescore paths, cosine_pairs / brute_force_topk) must be in
-    the recheck head — a changed plan without a fresh driver row is the
-    staleness this mechanism exists to retire. q107/q208 ride along as
-    the never-resampled rows-only refresh (VERDICT r11 ask #7)."""
-    import __spark_entry__ as entry
-
-    expected = {
-        "q345_ktruss_peel", "q397_winnowing_pairs",
-        "q96_ann_lsh", "q106_ann_ivf", "q228_ann_ivf_pq",
-        "q253_ann_ivf_exhaustive", "q254_ann_ivf_pq_exhaustive",
-        "q299_ann_lsh_exhaustive",
-        "q94_cosine_topk", "q95_embedding_near_dup",
-        "q219_semantic_dedup_onehop", "q344_dedup_signal_agreement",
-        # the `_edges` aggregate-derivation closure (every registered
-        # consumer of the shared co-purchase edge list)
-        "q200_pagerank_two_rounds", "q201_triangle_count",
-        "q202_degree_distribution", "q242_common_neighbors",
-        "q261_kcore_peel", "q324_bfs_shortest_path",
-        "q335_triangle_count", "q336_clustering_coefficient",
-        "q342_personalized_pagerank", "q367_dag_longest_path",
-        "q374_boruvka_round", "q389_bellman_ford_sssp",
-        "q399_harmonic_centrality",
-        "q107_approx_sketches", "q208_hll_sketch_union",
-    }
-    assert set(entry._RECHECK_THIS_ROUND) == expected
-
-
-def test_bench_names_exist_in_registry():
+def test_bench_names_exist_in_registry(bench):
     """A renamed/retired query must not silently break the driver's bench
     run — every name bench.py references has to resolve in the registry."""
-    prev = os.environ.get("SPARK_GRAFT_TABLE_CACHE")
-    import bench  # sets SPARK_GRAFT_TABLE_CACHE=off as an import side effect
-
-    if prev is None:
-        os.environ.pop("SPARK_GRAFT_TABLE_CACHE", None)
-    else:
-        os.environ["SPARK_GRAFT_TABLE_CACHE"] = prev
-
     reg = get_queries()
     missing = [n for n in bench.HEADLINE if n not in reg]
     missing += [n for n in bench.PIPELINE_COMPOSITE if n not in reg]
@@ -209,18 +138,10 @@ def test_bench_names_exist_in_registry():
     assert not set(bench.SLOW_CONTRACTS) & set(bench.HEADLINE)
 
 
-def test_bench_keys_match_r8_record():
+def test_bench_keys_match_r8_record(bench):
     """VERDICT r8 ask #5: BENCH_r09 vs BENCH_r08 must be like-for-like —
     the bench key set is pinned to the keys the round-8 record reported."""
     import json
-
-    prev = os.environ.get("SPARK_GRAFT_TABLE_CACHE")
-    import bench
-
-    if prev is None:
-        os.environ.pop("SPARK_GRAFT_TABLE_CACHE", None)
-    else:
-        os.environ["SPARK_GRAFT_TABLE_CACHE"] = prev
 
     with open(os.path.join(_ROOT, "BENCH_r08.json")) as f:
         recorded = set(json.load(f)["parsed"]["queries"])

@@ -1,21 +1,34 @@
 """Physical-plan audit over the whole query registry.
 
-Prints one line per batch query: exchange count + red-flag operators
-(CartesianProduct, BatchEvalPython outside the UDF surface, unexpected
-SortMergeJoin/BroadcastNestedLoopJoin). Run after adding operators:
+Prints one line per batch query: exchange count, normalized plan md5
+(``profile_query.plan_md5``) and red-flag operators (CartesianProduct,
+BatchEvalPython outside the UDF surface, unexpected
+SortMergeJoin/BroadcastNestedLoopJoin); then one ``moved <name> <old md5>
+-> <new md5>`` line per query whose md5 differs from the committed plan
+record ``tools/plan_baseline.json``, and their count:
 
     python tools/audit_plans.py [sf_dir]
+
+``--write-baseline`` rewrites the record, one ``{"exchanges", "md5",
+"round"}`` entry per query. ``round`` is kept while the md5 is unchanged;
+a moved plan gets the newest ``CORRECTNESS_r*.json`` round + 1, the first
+driver round that can see it, which fronts the query in the driver
+rotation (``__spark_entry__.rotation``) until that round checks it. Any
+change that moves a plan runs it.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from __spark_entry__ import correctness_records  # noqa: E402
 from data_engineer_capstone_spark.plans import get_queries  # noqa: E402
 from data_engineer_capstone_spark.session import get_spark  # noqa: E402
+from profile_query import plan_md5  # noqa: E402
 
 # Queries where a normally-suspicious operator is the intended plan.
 EXPECTED = {
@@ -340,9 +353,9 @@ def global_window_lines(plan: str) -> list[str]:
 
 
 def audit(spark, sf: str):
-    """Yield (name, exchange_count, flags) for every batch query's static
-    executed plan. Shared by the CLI below and the plan-regression pytest
-    (tests/test_maintenance.py vs tools/plan_baseline.json)."""
+    """Yield (name, exchange_count, flags, plan_md5) for every batch query's
+    static executed plan. Shared by the CLI below and the plan-regression
+    pytest (tests/test_maintenance.py vs tools/plan_baseline.json)."""
     for name, fn in sorted(get_queries().items()):
         if name.split("_")[0] in STREAMING:
             continue
@@ -352,31 +365,53 @@ def audit(spark, sf: str):
         unexpected = found - EXPECTED.get(name, set())
         gw = [] if name in GLOBAL_WINDOW_OK else global_window_lines(plan)
         flags = sorted(unexpected) + (["GLOBAL-WINDOW"] if gw else [])
-        yield name, plan.count("Exchange"), flags
+        yield name, plan.count("Exchange"), flags, plan_md5(df)
 
 
 BASELINE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "plan_baseline.json")
 
 
-def main() -> int:
-    import json
+def write_record(record: dict) -> None:
+    """One line per query, so a moved plan is a one-line diff."""
+    lines = [f" {json.dumps(k)}: {json.dumps(v, sort_keys=True)}"
+             for k, v in sorted(record.items())]
+    with open(BASELINE_PATH, "w") as f:
+        f.write("{\n" + ",\n".join(lines) + "\n}\n")
 
+
+def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     write_baseline = "--write-baseline" in sys.argv
     sf = args[0] if args else "/root/testdata/sf0.01"
-    spark = get_spark(app_name="plan-audit")
-    bad = 0
-    counts = {}
-    for name, exch, flags in audit(spark, sf):
-        counts[name] = exch
+    # pinned width: plans that size from defaultParallelism or the shuffle
+    # width (q242's task count, dedup's spread, sizing's floor) must hash
+    # the same on every host
+    spark = get_spark(app_name="plan-audit", master="local[8]",
+                      shuffle_partitions=8)
+    with open(BASELINE_PATH) as f:
+        baseline = json.load(f)
+    # a moved plan is first visible to the driver round after the newest
+    # committed CORRECTNESS record
+    next_round = max(correctness_records(), default=0) + 1
+    bad, record, moved = 0, {}, []
+    for name, exch, flags, md5 in audit(spark, sf):
+        old = baseline.get(name, {})
+        if old.get("md5") == md5:
+            rnd = old["round"]
+        else:
+            rnd = next_round
+            moved.append(f"moved {name} {old.get('md5', '-')} -> {md5}")
+        record[name] = {"exchanges": exch, "md5": md5, "round": rnd}
         status = "UNEXPECTED " + " ".join(flags) if flags else "ok"
-        print(f"{name:35s} exch={exch:2d} {status}")
+        print(f"{name:35s} exch={exch:2d} {md5} {status}")
         bad += bool(flags)
+    for line in moved:
+        print(line)
+    print(f"{len(moved)} queries whose plan md5 moved")
     if write_baseline:
-        with open(BASELINE_PATH, "w") as f:
-            json.dump(counts, f, indent=1, sort_keys=True)
-        print(f"baseline written: {BASELINE_PATH} ({len(counts)} queries)")
+        write_record(record)
+        print(f"baseline written: {BASELINE_PATH} ({len(record)} queries)")
     print(f"\n{bad} queries with unexpected operators")
     return 1 if bad else 0
 
