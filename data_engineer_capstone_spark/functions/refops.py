@@ -79,11 +79,9 @@ def abbreviate_state(col: Column | str) -> Column:
     (leading space and all) passes through; null stays null.
     """
     col = F.col(col) if isinstance(col, str) else col
-    pairs: list[Column] = []
-    for full, abbr in STATE_ABBREVIATIONS.items():
-        pairs.append(F.lit(full))
-        pairs.append(F.lit(abbr))
-    lookup = F.create_map(*pairs)
+    # one SQL map literal: one Py4J call instead of one per key and value
+    pairs = ", ".join(f"'{k}', '{v}'" for k, v in STATE_ABBREVIATIONS.items())
+    lookup = F.expr(f"map({pairs})")
     key = F.lower(F.substring(col, 2, 1000))
     return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
         F.coalesce(F.element_at(lookup, key), col)
@@ -156,10 +154,13 @@ def conform_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Typed replacement for the reference's empty-df-union conformance
     (ref make_empty_df + union, pyspark.py:159-167,182 — which silently
     *widened* types, SURVEY §1.2). Projects to schema order and casts every
-    column to its declared type, failing analysis if a column is missing."""
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
+    column to its declared type, failing analysis if a column is missing.
+    One ``selectExpr`` keeps it to one Py4J call, not a handful per column."""
+    def cast(f: T.StructField) -> str:
+        name = "`" + f.name.replace("`", "``") + "`"
+        return f"CAST({name} AS {f.dataType.simpleString()}) AS {name}"
+
+    return df.selectExpr(*[cast(f) for f in schema.fields])
 
 
 def union_align(dfs: Iterable[DataFrame]) -> DataFrame:

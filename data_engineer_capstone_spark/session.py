@@ -32,6 +32,20 @@ every knob is chosen so the same plan shapes survive a 1000-executor cluster:
   generates new source, and compiles a fresh class, on every call. Those
   are the 8 compiles left per warm ``star_etl`` pass. Spark sizes the
   cache once per JVM, from the session that compiles first.
+- ``fs.file.impl`` = ``LOCALFS_CLASS`` from ``LOCALFS_JAR`` on the driver
+  classpath (``jvm/PosixLocalFileSystem.java``). Without the native Hadoop
+  library, Hadoop's ``RawLocalFileSystem.setPermission`` runs one
+  ``chmod`` process for every file, ``.crc`` sidecar and directory it
+  creates: 443 spawns per ``star_etl`` pass of the repo benchmark, 207
+  of them in the one task that writes ``visitors``. Each costs the
+  writing thread 2.4-3.3 ms in an idle session (100-call loop, 4 vCPUs)
+  and more under a pass's load; the in-process call costs 0.1-0.2 ms.
+  The class sets the same modes in-process with ``java.nio``; everything
+  else is Hadoop's ``LocalFileSystem`` (checksum sidecars written and
+  verified on read), except that it refuses to rename onto an existing
+  file, like Hive's ``ProxyLocalFileSystem``, which pyspark's jars
+  otherwise register for ``file://``. A ``local[N]`` session's executors
+  run in the driver JVM, so the driver classpath covers them.
 """
 
 from __future__ import annotations
@@ -43,6 +57,13 @@ from pyspark.sql import SparkSession
 
 # Generated-code classes the JVM keeps compiled (see the module docstring).
 CODEGEN_CACHE_ENTRIES = 1000
+
+# The spawn-free local file system (see the module docstring); the jar is
+# built from its source by tools/build_localfs_jar.py.
+LOCALFS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "posix-localfs.jar"
+)
+LOCALFS_CLASS = "capstone.fs.PosixLocalFileSystem"
 
 
 def default_parallelism() -> int:
@@ -73,6 +94,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.extraClassPath", LOCALFS_JAR)
+        .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
         # ContextCleaner only deletes reliable-checkpoint files when this is
         # true (default false), and it reads the conf at context creation —

@@ -5,11 +5,15 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import stat
+import zipfile
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_engineer_capstone_spark.session import LOCALFS_CLASS, LOCALFS_JAR
 from data_engineer_capstone_spark.sources import (
     avro_source,
     conform,
@@ -176,8 +180,105 @@ def test_write_table_partitioned_one_file_per_partition(spark, sf_dir, tmp_path)
     for d in glob.glob(out + "/n_regionkey=*"):
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
         assert len(files) == 1, f"{d}: expected exactly one writer task's file"
+    _assert_lake_modes_and_sidecars(out)
     back = spark.read.parquet(out)
     assert back.count() == nation.count()
+
+
+def _assert_lake_modes_and_sidecars(root: str) -> list[str]:
+    """Every file below ``root`` is 0644 and every directory 0755 (Hadoop's
+    default ``fs.permissions.umask-mode`` 022, applied through
+    ``setPermission``), and every parquet file has its ``.crc`` sidecar.
+    Returns the parquet files."""
+    parquet = []
+    for d, _, files in os.walk(root):
+        assert stat.S_IMODE(os.stat(d).st_mode) == 0o755, d
+        for f in files:
+            assert stat.S_IMODE(os.stat(os.path.join(d, f)).st_mode) == 0o644, f
+            if f.endswith(".parquet"):
+                assert f".{f}.crc" in files, f"{d}/{f}: no checksum sidecar"
+                parquet.append(os.path.join(d, f))
+    return parquet
+
+
+def _forks() -> int:
+    """Processes and threads created on this host since boot."""
+    with open("/proc/stat") as f:
+        return next(int(line.split()[1]) for line in f if line.startswith("processes "))
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/stat"), reason="needs Linux /proc/stat")
+def test_write_table_spawns_no_process_per_file(spark, tmp_path):
+    """The session's local file system sets modes in-process: a
+    60-partition write forks fewer processes than it writes parquet files
+    (Hadoop without its native library runs a ``chmod`` per file, sidecar
+    and directory), and keeps the checksummed reads of ``LocalFileSystem``."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    assert fs.getClass().getName() == LOCALFS_CLASS
+
+    df = spark.range(6000).withColumn("k", (F.col("id") % 60).cast("int"))
+    out = str(tmp_path / "wide")
+    before = _forks()
+    write_table(df, out, partition_by=["k"])
+    forks = _forks() - before
+    parquet = _assert_lake_modes_and_sidecars(out)
+    assert len(parquet) == 60
+    assert forks < len(parquet), f"{forks} forks for {len(parquet)} files"
+    assert spark.read.parquet(out).count() == 6000
+
+    # one flipped byte fails the read against the .crc sidecar
+    victim = parquet[0]
+    data = bytearray(open(victim, "rb").read())
+    data[len(data) // 2] ^= 0xFF
+    with open(victim, "wb") as f:
+        f.write(bytes(data))
+    with pytest.raises(Exception, match="ChecksumException"):
+        spark.read.parquet(os.path.dirname(victim)).collect()
+
+
+def test_local_fs_sticky_bit_falls_back(spark, tmp_path):
+    """``PosixFilePermission`` has no sticky bit, so a sticky mode goes to
+    Hadoop's own ``setPermission`` and is kept."""
+    jvm = spark._jvm
+    shared = tmp_path / "shared"
+    shared.mkdir()
+    path = jvm.org.apache.hadoop.fs.Path(shared.as_uri())
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.setPermission(path, jvm.org.apache.hadoop.fs.permission.FsPermission("1777"))
+    assert stat.S_IMODE(os.stat(shared).st_mode) == 0o1777
+    fs.setPermission(path, jvm.org.apache.hadoop.fs.permission.FsPermission("750"))
+    assert stat.S_IMODE(os.stat(shared).st_mode) == 0o750
+
+
+def test_local_fs_rename_refuses_existing_file(spark, tmp_path):
+    """As with Hive's ProxyLocalFileSystem, the default for ``file://``
+    without the override, a rename onto an existing file fails."""
+    jvm = spark._jvm
+    (tmp_path / "a").write_text("a")
+    (tmp_path / "b").write_text("b")
+    a, b, c = (jvm.org.apache.hadoop.fs.Path((tmp_path / n).as_uri()) for n in "abc")
+    fs = a.getFileSystem(spark._jsc.hadoopConfiguration())
+    assert not fs.rename(a, b)
+    assert (tmp_path / "b").read_text() == "b"
+    assert fs.rename(a, c) and (tmp_path / "c").read_text() == "a"
+
+
+@pytest.mark.skipif(shutil.which("javac") is None, reason="needs a JDK")
+def test_localfs_jar_rebuilds_from_source(tmp_path):
+    """The committed jar holds exactly the classes its committed source
+    compiles to (tools/build_localfs_jar.py)."""
+    from tools.build_localfs_jar import build
+
+    def classes(jar):
+        with zipfile.ZipFile(jar) as z:
+            return {n: z.read(n) for n in z.namelist() if n.endswith(".class")}
+
+    jar = str(tmp_path / "localfs.jar")
+    build(jar)
+    rebuilt = classes(jar)
+    assert rebuilt and rebuilt == classes(LOCALFS_JAR)
 
 
 def test_write_table_salted_spreads_hot_partition(spark, tmp_path):
