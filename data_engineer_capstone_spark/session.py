@@ -46,6 +46,33 @@ every knob is chosen so the same plan shapes survive a 1000-executor cluster:
   file, like Hive's ``ProxyLocalFileSystem``, which pyspark's jars
   otherwise register for ``file://``. A ``local[N]`` session's executors
   run in the driver JVM, so the driver classpath covers them.
+- Class-data sharing for the driver JVM (``cds.py``). A short batch job
+  pays a cold JVM: ``setup_s`` of the repo benchmark is 21-24 s against
+  a 4.5 s pass, and most of the JVM's start is loading and verifying
+  some 17,000 classes. The first launch for a key records the classes it
+  loads (``-XX:DumpLoadedClassList``); when the process exits, after
+  its JVM, one ``java -Xshare:dump`` run with that JVM's own classpath,
+  heap and module options writes a static archive (160-230 MB, 35-65 s
+  on 4 vCPUs, output to ``<key>.log``), and every later launch maps it
+  (``-XX:SharedArchiveFile=... -Xshare:auto`` in
+  ``spark.driver.defaultJavaOptions``, merged with the caller's). One
+  process per key records (an ``O_EXCL`` lock, cleared when its pid is
+  dead). The archive lives in
+  ``${XDG_CACHE_HOME:-~/.cache}/data_engineer_capstone_spark/cds/``, a
+  per-host cache that outlives a checkout; each new archive evicts all
+  but the ``KEEP_ARCHIVES`` (3) most recently used, and a launch that
+  maps one marks it used. Its key covers what CDS
+  checks: the Java build, the pyspark version, the heap size, and the
+  path, size and mtime of every classpath entry (``LOCALFS_JAR``, the
+  conf directory, every Spark jar), so a stale archive is never passed;
+  the JVM ignores a corrupt one silently. CDS needs each classpath
+  directory empty, so the launch points ``SPARK_CONF_DIR`` at an empty
+  directory in the cache when the Spark home's conf directory holds
+  only ``*.template`` files. It is skipped when ``SPARK_CONF_DIR``,
+  ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH``,
+  ``PYSPARK_SUBMIT_ARGS`` or ``PYSPARK_GATEWAY_PORT`` is set, when the
+  conf directory holds anything else (a real ``spark-defaults.conf`` is
+  never hidden), and when the cache cannot be written.
 """
 
 from __future__ import annotations
@@ -53,6 +80,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import cds
 
 
 # Generated-code classes the JVM keeps compiled (see the module docstring).
@@ -80,33 +109,34 @@ def get_spark(
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.driver.extraClassPath", LOCALFS_JAR)
-        .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)
-        .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        "spark.driver.extraClassPath": LOCALFS_JAR,
+        "spark.hadoop.fs.file.impl": LOCALFS_CLASS,
+        "spark.sql.warehouse.dir": "/tmp/spark_graft_warehouse",
         # ContextCleaner only deletes reliable-checkpoint files when this is
         # true (default false), and it reads the conf at context creation —
         # so it is set here, not in materialize(). Without it the ~90
         # materialize() sites (incl. per-round checkpoints inside CC/BFS/
         # k-truss loops) accumulate unbounded data under
         # SPARK_GRAFT_CHECKPOINT_DIR in SPARK_GRAFT_CHECKPOINT=reliable runs.
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        **(extra_conf or {}),
+    }
+    with cds.driver_launch(conf):
+        builder = SparkSession.builder.master(master).appName(app_name)
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

@@ -124,6 +124,21 @@ def test_profile_query_single_run(spark, capsys, monkeypatch):
     out = capsys.readouterr().out
     assert "warmup" in out
     assert "min/median n/a" in out
+    # the run's driver-JVM CPU split by thread group
+    import re
+
+    assert re.search(r"jvm cpu-s c2 [\d.]+ c1 [\d.]+ tasks [\d.]+ gc [\d.]+ py4j [\d.]+ other ", out)
+    # a compiler thread that exits during a run leaves its share in `other`
+    before = (10.0, {"1": ("c2", 4.0), "2": ("c2", 1.0), "3": (None, 2.0)})
+    after = (16.0, {"1": ("c2", 5.5), "3": (None, 2.5), "4": ("tasks", 2.0)})
+    split = profile_query.thread_split(before, after)
+    assert split == {"c2": 1.5, "tasks": 2.0, "other": 2.5}
+    groups = {
+        "C2 CompilerThre": "c2", "C1 CompilerThre": "c1", "Executor task l": "tasks",
+        "GC Thread#0": "gc", "ParGC Thread#3": "gc", "G1 Conc#0": "gc",
+        "Thread-12": "py4j", "VM Thread": None, "Thread-12-x": None,
+    }
+    assert {c: profile_query.thread_group(c) for c in groups} == groups
 
 
 def test_expansion_partitions_policy(spark):

@@ -4,9 +4,14 @@ sinks, offline fixture prep."""
 from __future__ import annotations
 
 import glob
+import json
 import os
+import re
 import shutil
 import stat
+import subprocess
+import sys
+import time
 import zipfile
 
 import pytest
@@ -279,6 +284,201 @@ def test_localfs_jar_rebuilds_from_source(tmp_path):
     build(jar)
     rebuilt = classes(jar)
     assert rebuilt and rebuilt == classes(LOCALFS_JAR)
+
+
+# One driver JVM per call, in its own process: the session fixture's JVM
+# is launched once per test process, and CDS only acts on a launch.
+_CDS_SESSION = r"""
+import json, os, sys, time
+from pyspark import SparkContext
+from data_engineer_capstone_spark.session import get_spark
+
+extra, barrier, run_exit_hooks = json.loads(sys.argv[1])
+spark = get_spark(app_name="cds-probe", extra_conf=extra)
+with open(f"/proc/{SparkContext._gateway.proc.pid}/cmdline", "rb") as f:
+    argv = f.read().decode().split("\0")
+argv = argv[: argv.index("org.apache.spark.deploy.SparkSubmit")]  # JVM options
+result = {
+    "answer": spark.range(1000).selectExpr("sum(id) AS s").collect()[0].s,
+    "flags": [a for a in argv if "Xshare" in a or "SharedArchiveFile" in a
+              or "DumpLoadedClassList" in a],
+    "probe": spark.sparkContext.getConf().get("spark.capstone.probe", None),
+}
+if barrier:  # hold the session until every peer has launched its own
+    open(os.path.join(barrier, str(os.getpid())), "w").close()
+    deadline = time.time() + 300
+    while len(os.listdir(barrier)) < 2 and time.time() < deadline:
+        time.sleep(0.2)
+print(json.dumps(result), flush=True)
+if not run_exit_hooks:
+    os._exit(0)
+"""
+
+
+def _cds_session(cache, extra=None, barrier=None, run_exit_hooks=False, env=None):
+    """Start a session process with ``cache`` as XDG_CACHE_HOME; the
+    returned wait gives its result record, stdout and stderr."""
+    from data_engineer_capstone_spark import cds
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # none of the launch settings that turn CDS off
+    base = {k: v for k, v in os.environ.items()
+            if k not in cds._CLASSPATH_ENV + ("SPARK_CONF_DIR",)}
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _CDS_SESSION, json.dumps([extra or {}, barrier, run_exit_hooks])],
+        cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        env={**base, "XDG_CACHE_HOME": str(cache), "SPARK_GRAFT_DRIVER_MEM": "1g",
+             "SPARK_GRAFT_CPUS": "2", **(env or {})},
+    )
+
+    def wait():
+        out, err = proc.communicate(timeout=600)
+        assert proc.returncode == 0, err[-3000:]
+        return json.loads(out.splitlines()[-1]), out, err
+
+    return wait
+
+
+def _cds_dir(cache):
+    return os.path.join(str(cache), "data_engineer_capstone_spark", "cds")
+
+
+def _cds_key(cache, jar=LOCALFS_JAR):
+    """The archive key of a ``_cds_session`` launch."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    from data_engineer_capstone_spark import cds
+
+    empty = os.path.join(_cds_dir(cache), "conf")
+    os.makedirs(empty, exist_ok=True)
+    conf = {"spark.driver.memory": "1g", "spark.driver.extraClassPath": jar}
+    return cds.launch_key(conf, _find_spark_home(), empty)
+
+
+def _no_cds_output(out, err):
+    """No JVM line about class sharing, and the result is the last line."""
+    for line in out.splitlines()[:-1] + err.splitlines():
+        assert not re.search(r"\[cds|shared (archive|class)", line, re.I), line
+
+
+@pytest.fixture(scope="module")
+def cds_archive(tmp_path_factory):
+    """A cache whose archive was recorded by one session with a copy of
+    the local-FS jar on its classpath and dumped when it exited. The
+    cache already held ``KEEP_ARCHIVES`` archives of other keys, used a
+    day or more before; returns the names the dump left."""
+    from data_engineer_capstone_spark import cds
+
+    cache = tmp_path_factory.mktemp("cds-cache")
+    jar = str(cache / "localfs-copy.jar")
+    shutil.copy2(LOCALFS_JAR, jar)
+    os.makedirs(_cds_dir(cache))
+    old = [f"{i:016x}" for i in range(cds.KEEP_ARCHIVES)]
+    for age, stem in enumerate(old, 1):
+        for ext in (".jsa", ".log"):
+            path = os.path.join(_cds_dir(cache), stem + ext)
+            open(path, "w").close()
+            os.utime(path, (time.time() - age * 86400,) * 2)
+    result, out, err = _cds_session(
+        cache, {"spark.driver.extraClassPath": jar}, run_exit_hooks=True
+    )()
+    key = _cds_key(cache, jar)
+    assert result["answer"] == 499500
+    [flag] = result["flags"]
+    assert flag.startswith(f"-XX:DumpLoadedClassList={_cds_dir(cache)}/{key}.")
+    _no_cds_output(out, err)
+    left = set(os.listdir(_cds_dir(cache)))
+    # the least recently used of the older archives made way for the new one
+    assert left == {"conf", f"{key}.jsa", f"{key}.log"} | {
+        stem + ext for stem in old[:-1] for ext in (".jsa", ".log")
+    }, left
+    return cache, jar, key
+
+
+def test_cds_session_records_then_maps_archive(cds_archive, tmp_path):
+    """The first session records its classes and leaves an archive at
+    exit; the next one loads Spark's classes from it and marks it used."""
+    cache, jar, key = cds_archive
+    archive = os.path.join(_cds_dir(cache), f"{key}.jsa")
+    os.utime(archive, (time.time() - 10 * 86400,) * 2)
+    loads = tmp_path / "class-load.log"
+    result, out, err = _cds_session(cache, {
+        "spark.driver.extraClassPath": jar,
+        "spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={loads}",
+    })()
+    assert result["answer"] == 499500
+    assert result["flags"] == [f"-XX:SharedArchiveFile={_cds_dir(cache)}/{key}.jsa", "-Xshare:auto"]
+    _no_cds_output(out, err)
+    log = loads.read_text()
+    assert " org.apache.spark.SparkContext source: shared objects file" in log
+    assert time.time() - os.stat(archive).st_mtime < 3600
+
+
+def test_cds_stale_archive_not_passed(cds_archive, tmp_path):
+    """A touched classpath jar makes a new key, and the archive recorded
+    for the old one is not passed."""
+    cache, jar, key = cds_archive
+    st = os.stat(jar)
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    new = _cds_key(cache, jar)
+    lock = os.path.join(_cds_dir(cache), f"{new}.lock")
+    try:
+        assert new != key
+        # a live recorder for the new key, so this session only launches
+        with open(lock, "w") as f:
+            f.write(str(os.getpid()))
+        result, out, err = _cds_session(cache, {"spark.driver.extraClassPath": jar})()
+    finally:
+        os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns))
+        os.unlink(lock)
+    assert result["answer"] == 499500
+    assert result["flags"] == []
+    _no_cds_output(out, err)
+
+
+def test_cds_corrupt_archive_falls_back(tmp_path):
+    """A corrupt file at the key's path is passed, and the JVM ignores it
+    without a word."""
+    key = _cds_key(tmp_path)
+    archive = os.path.join(_cds_dir(tmp_path), f"{key}.jsa")
+    with open(archive, "wb") as f:
+        f.write(os.urandom(1 << 16))
+    result, out, err = _cds_session(tmp_path)()
+    assert result["answer"] == 499500
+    assert result["flags"] == [f"-XX:SharedArchiveFile={archive}", "-Xshare:auto"]
+    _no_cds_output(out, err)
+
+
+def test_cds_skipped_with_real_spark_defaults(tmp_path):
+    """A Spark home whose conf directory holds a real spark-defaults.conf
+    launches without CDS, and the file's setting takes effect."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    home = tmp_path / "spark-home"
+    (home / "conf").mkdir(parents=True)
+    spark_home = _find_spark_home()
+    for name in os.listdir(spark_home):
+        if name != "conf":
+            os.symlink(os.path.join(spark_home, name), home / name)
+    (home / "conf" / "spark-defaults.conf").write_text("spark.capstone.probe  42\n")
+    result, out, err = _cds_session(tmp_path / "cache", env={"SPARK_HOME": str(home)})()
+    assert result["answer"] == 499500
+    assert result["flags"] == []
+    assert result["probe"] == "42"
+    assert not os.path.exists(_cds_dir(tmp_path / "cache"))
+
+
+def test_cds_one_recorder_for_concurrent_first_sessions(tmp_path):
+    """Two first sessions on one key: one records, the other launches
+    plainly rather than start a second dump."""
+    barrier = tmp_path / "barrier"
+    barrier.mkdir()
+    waits = [_cds_session(tmp_path, barrier=str(barrier)) for _ in range(2)]
+    results = [wait()[0] for wait in waits]
+    assert [r["answer"] for r in results] == [499500, 499500]
+    flags = sorted(tuple(r["flags"]) for r in results)
+    assert flags[0] == ()
+    assert len(flags[1]) == 1 and flags[1][0].startswith("-XX:DumpLoadedClassList=")
 
 
 def test_write_table_salted_spreads_hot_partition(spark, tmp_path):

@@ -3,13 +3,18 @@ protocol, now a committed tool instead of an ad-hoc snippet).
 
 Runs ONE registered query N times in a fresh session at a given SF and
 prints, per run: wall time, the number of Janino compiles of generated
-code (the JVM's CodegenMetrics delta) and the md5 of the NORMALIZED
+code (the JVM's CodegenMetrics delta), the md5 of the NORMALIZED
 executed plan (AQE final plan, expression/plan ids and temp paths
-stripped). A descending time curve onto a stable floor with an unchanged
-plan hash and no compiles after the first run = JIT/scheduler warm-up
-(environment), not plan cost; compiles in every run = generated code
-recompiled (codegen cache too small, or source that differs per run); a
-changed hash or a flat-but-slower curve = a real regression.
+stripped) and the driver JVM's CPU-seconds split by thread group, read
+from ``/proc/<jvm pid>/task/*/{comm,stat}``: the C2 and C1 JIT compiler
+threads, executor task threads, GC threads, the Py4J gateway threads
+(unnamed ``Thread-N``, where the query's planning runs) and the rest
+(including threads that exited during the run). A descending time
+curve onto a stable floor with an unchanged plan hash and no compiles
+after the first run = JIT/scheduler warm-up (environment), not plan
+cost; compiles in every run = generated code recompiled (codegen cache
+too small, or source that differs per run); a changed hash or a
+flat-but-slower curve = a real regression.
 
 Usage:
     python tools/profile_query.py q30_tpch_q1_agg --runs 8
@@ -20,6 +25,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import collections
 import hashlib
 import os
 import re
@@ -93,6 +99,58 @@ def plan_md5(df) -> str:
     return hashlib.md5(normalized_plan(df).encode()).hexdigest()[:12]
 
 
+# JVM thread groups by /proc comm (names are cut to 15 characters). GC
+# workers are `GC Thread#N` under G1 (plus `G1 ...` service threads) and
+# `ParGC Thread#N` under the parallel collector.
+THREAD_GROUPS = (
+    ("c2", re.compile(r"C2 CompilerThre")),
+    ("c1", re.compile(r"C1 CompilerThre")),
+    ("tasks", re.compile(r"Executor task l")),
+    ("gc", re.compile(r"(Par)?GC Thread|G1 ")),
+    ("py4j", re.compile(r"Thread-\d+$")),
+)
+
+
+def thread_group(comm: str) -> str | None:
+    return next((g for g, pattern in THREAD_GROUPS if pattern.match(comm)), None)
+
+
+def _cpu_s(stat: str) -> float:
+    fields = stat[stat.rindex(")") + 2:].split()
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+
+
+def jvm_thread_cpu(pid: int) -> tuple[float, dict[str, tuple[str | None, float]]]:
+    """A JVM's CPU-seconds so far, and each live thread's group (None
+    outside ``THREAD_GROUPS``) and CPU-seconds, by thread id."""
+    with open(f"/proc/{pid}/stat") as f:
+        total = _cpu_s(f.read())
+    threads = {}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                comm = f.read().strip()
+            with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                used = _cpu_s(f.read())
+        except OSError:  # the thread exited meanwhile
+            continue
+        threads[tid] = (thread_group(comm), used)
+    return total, threads
+
+
+def thread_split(before, after) -> collections.Counter:
+    """CPU-seconds per thread group between two ``jvm_thread_cpu``
+    snapshots. ``other`` is the rise of the process total less the named
+    groups', so it also holds the threads that exited in between (the JVM
+    retires idle compiler threads)."""
+    cpu = collections.Counter()
+    for tid, (group, used) in after[1].items():
+        if group:
+            cpu[group] += used - before[1].get(tid, (group, 0.0))[1]
+    cpu["other"] = after[0] - before[0] - sum(cpu.values())
+    return cpu
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("name")
@@ -113,17 +171,24 @@ def main() -> None:
     spark = get_spark(app_name=f"profile-{args.name}")
     fn = get_queries()[args.name]
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jvm_pid = spark.sparkContext._gateway.proc.pid
     times, hashes = [], []
     for i in range(args.runs):
         compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+        cpu = jvm_thread_cpu(jvm_pid)
         t0 = time.time()
         df = fn(spark, args.sf)
         df.count() if args.count_only else df.collect()
         times.append(time.time() - t0)
+        cpu = thread_split(cpu, jvm_thread_cpu(jvm_pid))
         compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
         hashes.append(plan_md5(df))
+        split = " ".join(
+            f"{g} {cpu[g]:.2f}" for g in [g for g, _ in THREAD_GROUPS] + ["other"]
+        )
         print(
-            f"run {i}: {times[-1]:.3f} s  compiles {compiled}  plan md5 {hashes[-1]}",
+            f"run {i}: {times[-1]:.3f} s  compiles {compiled}  plan md5 {hashes[-1]}"
+            f"  jvm cpu-s {split}",
             flush=True,
         )
     timed = times[1:]
