@@ -72,7 +72,42 @@ every knob is chosen so the same plan shapes survive a 1000-executor cluster:
   ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH``,
   ``PYSPARK_SUBMIT_ARGS`` or ``PYSPARK_GATEWAY_PORT`` is set, when the
   conf directory holds anything else (a real ``spark-defaults.conf`` is
-  never hidden), and when the cache cannot be written.
+  never hidden), and when the cache cannot be written. The archive costs
+  resident memory, mostly anonymous rather than the mapped file: at the
+  end of a ``queries`` run of the repo benchmark the driver JVM read
+  ``VmHWM`` 994 MB, ``RssAnon`` 966 MB and ``RssFile`` 23 MB without it,
+  and 1169-1206 MB, 1090-1144 MB and 53 MB with it (perfbench
+  ``peak_rss_mb`` 1320 against 1495-1532 MB; one run without, two with).
+- ``JIT_OPTIONS`` lead ``spark.driver.defaultJavaOptions`` (the caller's
+  options follow, so a flag the caller repeats wins; the CDS flags go in
+  front). They raise HotSpot's four C2 (tier-4) thresholds tenfold.
+  After the archive, C2 is the largest CPU consumer of a short job: about
+  10 of 22 driver-JVM CPU-s in a measured ``star_etl`` pass of the repo
+  benchmark, against 4.5 s of executor tasks. One ``-XX:+LogCompilation``
+  run put 13.7 C2 thread-seconds in that 7.2 s pass: generated classes
+  3.9, JDK 2.2, Catalyst 1.7, Java serialization 1.3, Spark core 1.2,
+  Scala 1.0, Parquet 1.0. Planning, Janino, serialization and Catalyst
+  tree code run thousands of times a pass, not millions, so with the
+  higher thresholds they stay at C1; per-row loops still cross 400,000
+  back-edges within one task and reach C2. In the pass, C2 fell to 1.8-2.0
+  CPU-s. Over ten alternating pairs of the repo benchmark (4 vCPUs,
+  JDK 17), ``cpu_s`` fell from 16.3 to 12.2 s on ``queries`` and from
+  21.5 to 16.6 s on ``star_etl`` (10/10 pairs each), while the wall-time
+  medians moved within noise: ``setup_s`` +5% on both, ``pass_s`` +7% and
+  +3.5%. sf0.1 throughput held in two rounds per side: q30 min
+  3.33/3.53 → 3.05/3.44 s and q335 min 15.8/15.3 → 15.2/14.7 s, first
+  runs no slower. One later pair read q242 slower (first run 14.9 → 16.8
+  s, min 5.6 → 6.0 s), not yet told apart from host noise. Measured and
+  rejected: ``-XX:TieredStopAtLevel=1`` (no C2;
+  ``cpu_s`` −42%, but sf0.1 q30 min 3.06 → 7.02 s and q335 16.7 → 27.8 s);
+  the back-edge threshold left at its default (half the gain, and
+  ``queries`` p50 latency +13-20%); a compiler-directives allow-list of
+  C2 for generated, execution, Parquet and unsafe code only (C2 compile
+  time 57.6 → 24.1 s in the run, ``cpu_s`` unmoved: the freed threads
+  compiled more generated code); ``-XX:CICompilerCount=2`` (−20% on
+  ``star_etl``, but one C2 thread on any host); ``-XX:Tier4LoadFeedback=1``
+  (no effect). Executors of a cluster keep the JVM's defaults; there the
+  driver only plans, which is the lukewarm code this targets.
 """
 
 from __future__ import annotations
@@ -86,6 +121,13 @@ from . import cds
 
 # Generated-code classes the JVM keeps compiled (see the module docstring).
 CODEGEN_CACHE_ENTRIES = 1000
+
+# HotSpot's four C2 (tier-4) compile thresholds, each ten times the JDK's
+# default, for the driver JVM (see the module docstring).
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 # The spawn-free local file system (see the module docstring); the jar is
 # built from its source by tools/build_localfs_jar.py.
@@ -133,6 +175,8 @@ def get_spark(
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         **(extra_conf or {}),
     }
+    # the caller's options follow, so any flag they repeat wins
+    conf[cds.DRIVER_OPTIONS] = f"{JIT_OPTIONS} {conf.get(cds.DRIVER_OPTIONS, '')}".strip()
     with cds.driver_launch(conf):
         builder = SparkSession.builder.master(master).appName(app_name)
         for k, v in conf.items():

@@ -128,6 +128,9 @@ def test_profile_query_single_run(spark, capsys, monkeypatch):
     import re
 
     assert re.search(r"jvm cpu-s c2 [\d.]+ c1 [\d.]+ tasks [\d.]+ gc [\d.]+ py4j [\d.]+ other ", out)
+    # and the JVM's own JIT compile time, which a retired compiler thread
+    # does not hide
+    assert re.search(r" other -?[\d.]+  jit compile-s [\d.]+$", out, re.M)
     # a compiler thread that exits during a run leaves its share in `other`
     before = (10.0, {"1": ("c2", 4.0), "2": ("c2", 1.0), "3": (None, 2.0)})
     after = (16.0, {"1": ("c2", 5.5), "3": (None, 2.5), "4": ("tasks", 2.0)})
@@ -422,6 +425,32 @@ def test_plan_normalizer_distinct_group_order():
     md5 = plan_md5(_fake_plan_df(plan("x", "y")))
     assert plan_md5(_fake_plan_df(plan("y", "x"))) == md5
     assert plan_md5(_fake_plan_df(plan("x", "y", agg="sum"))) != md5
+
+
+def test_plan_normalizer_cut_filter_list():
+    """A scan cuts a long filter list at a fixed raw length, so longer
+    expression ids move the cut (q30 at sf0.01, a session's first run
+    against later ones). Both cuts hash alike; a change elsewhere in the
+    scan still moves the md5, and a whole list is kept."""
+    from tools.profile_query import normalized_plan, plan_md5
+
+    def scan(ids, cut, fmt="Parquet"):
+        a, b = ids
+        return (
+            f"+- FileScan parquet [l_shipdate#{a},l_returnflag#{b}] Batched: true, "
+            f"DataFilters: [isnotnull(l_shipdate#{a}), (l_shipdate#{a} <= 2001-06-01 00:00:00), "
+            f"isnotnull(l_returnflag#{b}),{cut}..., Format: {fmt}, "
+            "Location: InMemoryFileIndex(1 paths)[file:/data/lineitem.parquet], "
+            f"PartitionFilters: [isnotnull(p#{a})], PushedFilters: [IsNotNull(l_shipdate)], "
+            "ReadSchema: struct<l_shipdate:timestamp_ntz,l_returnflag:string>"
+        )
+
+    md5 = plan_md5(_fake_plan_df(scan((61, 66), " isn")))
+    assert plan_md5(_fake_plan_df(scan((1061, 1066), ""))) == md5
+    assert plan_md5(_fake_plan_df(scan((61, 66), " isn", fmt="ORC"))) != md5
+    out = normalized_plan(_fake_plan_df(scan((61, 66), " isn")))
+    assert "DataFilters: ..., Format: Parquet" in out
+    assert "PartitionFilters: [isnotnull(p#x)]" in out
 
 
 def test_gemm_cosine_twin_matches_hof_path(spark):

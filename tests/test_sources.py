@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_engineer_capstone_spark.session import LOCALFS_CLASS, LOCALFS_JAR
+from data_engineer_capstone_spark.session import JIT_OPTIONS, LOCALFS_CLASS, LOCALFS_JAR
 from data_engineer_capstone_spark.sources import (
     avro_source,
     conform,
@@ -303,7 +303,13 @@ result = {
     "flags": [a for a in argv if "Xshare" in a or "SharedArchiveFile" in a
               or "DumpLoadedClassList" in a],
     "probe": spark.sparkContext.getConf().get("spark.capstone.probe", None),
+    "jvm_probe": spark._jvm.java.lang.System.getProperty("capstone.probe"),
 }
+hotspot = spark._jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    spark._jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+result["jit"] = {name: hotspot.getVMOption(name).getValue() for name in (
+    "Tier4InvocationThreshold", "Tier4MinInvocationThreshold",
+    "Tier4CompileThreshold", "Tier4BackEdgeThreshold")}
 if barrier:  # hold the session until every peer has launched its own
     open(os.path.join(barrier, str(os.getpid())), "w").close()
     deadline = time.time() + 300
@@ -337,6 +343,10 @@ def _cds_session(cache, extra=None, barrier=None, run_exit_hooks=False, env=None
         return json.loads(out.splitlines()[-1]), out, err
 
     return wait
+
+
+# the session's C2 thresholds, by flag name
+_JIT_DEFAULTS = dict(o.removeprefix("-XX:").split("=") for o in JIT_OPTIONS.split())
 
 
 def _cds_dir(cache):
@@ -384,6 +394,7 @@ def cds_archive(tmp_path_factory):
     )()
     key = _cds_key(cache, jar)
     assert result["answer"] == 499500
+    assert result["jit"] == _JIT_DEFAULTS
     [flag] = result["flags"]
     assert flag.startswith(f"-XX:DumpLoadedClassList={_cds_dir(cache)}/{key}.")
     _no_cds_output(out, err)
@@ -412,6 +423,22 @@ def test_cds_session_records_then_maps_archive(cds_archive, tmp_path):
     log = loads.read_text()
     assert " org.apache.spark.SparkContext source: shared objects file" in log
     assert time.time() - os.stat(archive).st_mtime < 3600
+
+
+def test_jit_thresholds_merge_with_caller_and_archive(cds_archive):
+    """The driver JVM runs with the session's C2 thresholds; a caller's
+    default Java options follow them, so the caller's own threshold wins
+    and its other options survive, and the archive flags still lead."""
+    cache, jar, key = cds_archive
+    result, out, err = _cds_session(cache, {
+        "spark.driver.extraClassPath": jar,
+        "spark.driver.defaultJavaOptions": "-XX:Tier4InvocationThreshold=7000 -Dcapstone.probe=1",
+    })()
+    assert result["answer"] == 499500
+    assert result["jit"] == {**_JIT_DEFAULTS, "Tier4InvocationThreshold": "7000"}
+    assert result["jvm_probe"] == "1"
+    assert result["flags"] == [f"-XX:SharedArchiveFile={_cds_dir(cache)}/{key}.jsa", "-Xshare:auto"]
+    _no_cds_output(out, err)
 
 
 def test_cds_stale_archive_not_passed(cds_archive, tmp_path):

@@ -9,7 +9,10 @@ stripped) and the driver JVM's CPU-seconds split by thread group, read
 from ``/proc/<jvm pid>/task/*/{comm,stat}``: the C2 and C1 JIT compiler
 threads, executor task threads, GC threads, the Py4J gateway threads
 (unnamed ``Thread-N``, where the query's planning runs) and the rest
-(including threads that exited during the run). A descending time
+(including threads that exited during the run), and beside it the
+JVM's own JIT compile time (``CompilationMXBean`` total, which still
+counts a compiler thread that the JVM retired, while its CPU lands in
+``other``). A descending time
 curve onto a stable floor with an unchanged plan hash and no compiles
 after the first run = JIT/scheduler warm-up (environment), not plan
 cost; compiles in every run = generated code recompiled (codegen cache
@@ -26,6 +29,7 @@ from __future__ import annotations
 
 import argparse
 import collections
+import difflib
 import hashlib
 import os
 import re
@@ -60,6 +64,19 @@ def normalized_plan(df) -> str:
     # keep the * marker (codegen vs not is plan-relevant), drop the id
     plan = re.sub(r"\*\(\d+\)", "*(n)", plan)
     plan = re.sub(r"(file|hdfs|s3a):[^\s,\]\)]+", r"\1:PATH", plan)
+    # a scan cuts each metadata value to spark.sql.maxMetadataStringLength
+    # characters (default 100) and appends `...`. The cut counts the raw
+    # expression ids, so where ids come before it, their digit count moves
+    # it (observed on q30 at sf0.01: `isnotnull(l_returnflag#x), isn...`
+    # in a session's first run, `isnotnull(l_returnflag#x),...` in later
+    # runs, whose ids are longer). Drop the text of a cut filter list; the
+    # Filter node above the scan still prints the same predicates whole.
+    plan = re.sub(
+        r"\b((?:Data|Partition)Filters: )(?:(?!, \w+: ).)*?\.\.\.(?=, \w+: |$)",
+        r"\1...",
+        plan,
+        flags=re.M,
+    )
     plan = re.sub(r"Statistics\([^)]*\)", "Statistics()", plan)
     # the distributed-rank machinery (refops.distributed_cumsum /
     # deterministic_id) bakes a partition-id -> offset map literal into the
@@ -95,8 +112,12 @@ def normalized_plan(df) -> str:
     )
 
 
+def _md5(plan: str) -> str:
+    return hashlib.md5(plan.encode()).hexdigest()[:12]
+
+
 def plan_md5(df) -> str:
-    return hashlib.md5(normalized_plan(df).encode()).hexdigest()[:12]
+    return _md5(normalized_plan(df))
 
 
 # JVM thread groups by /proc comm (names are cut to 15 characters). GC
@@ -164,31 +185,36 @@ def main() -> None:
     ap.add_argument(
         "--dump-plan",
         action="store_true",
-        help="print the full normalized executed plan of the last run",
+        help="print the full normalized executed plan of the last run, and a"
+        " diff of the normalized plans wherever the md5 moves between runs",
     )
     args = ap.parse_args()
 
     spark = get_spark(app_name=f"profile-{args.name}")
     fn = get_queries()[args.name]
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     jvm_pid = spark.sparkContext._gateway.proc.pid
-    times, hashes = [], []
+    times, hashes, plans = [], [], []
     for i in range(args.runs):
         compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+        jit_ms = jit.getTotalCompilationTime()
         cpu = jvm_thread_cpu(jvm_pid)
         t0 = time.time()
         df = fn(spark, args.sf)
         df.count() if args.count_only else df.collect()
         times.append(time.time() - t0)
         cpu = thread_split(cpu, jvm_thread_cpu(jvm_pid))
+        jit_ms = jit.getTotalCompilationTime() - jit_ms
         compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
-        hashes.append(plan_md5(df))
+        plans.append(normalized_plan(df))
+        hashes.append(_md5(plans[-1]))
         split = " ".join(
             f"{g} {cpu[g]:.2f}" for g in [g for g, _ in THREAD_GROUPS] + ["other"]
         )
         print(
             f"run {i}: {times[-1]:.3f} s  compiles {compiled}  plan md5 {hashes[-1]}"
-            f"  jvm cpu-s {split}",
+            f"  jvm cpu-s {split}  jit compile-s {jit_ms / 1000:.2f}",
             flush=True,
         )
     timed = times[1:]
@@ -204,7 +230,14 @@ def main() -> None:
         f"plan stable: {len(set(hashes)) == 1} ({hashes[-1]})"
     )
     if args.dump_plan:
-        print(normalized_plan(df))
+        print(plans[-1])
+        for i in range(1, len(plans)):
+            if hashes[i] != hashes[i - 1]:
+                print(f"\nplan md5 moved, run {i - 1} -> run {i}:")
+                print("\n".join(difflib.unified_diff(
+                    plans[i - 1].splitlines(), plans[i].splitlines(),
+                    f"run {i - 1}", f"run {i}", lineterm="",
+                )))
 
 
 if __name__ == "__main__":
