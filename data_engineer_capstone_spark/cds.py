@@ -12,6 +12,8 @@ import atexit
 import contextlib
 import hashlib
 import os
+import re
+import shlex
 import shutil
 import subprocess
 import time
@@ -70,6 +72,31 @@ def launch_key(conf: dict[str, str], spark_home: str, conf_dir: str) -> str:
     for d in (conf_dir, os.path.join(spark_home, "jars")):
         lines += [_stat(os.path.join(d, n)) for n in sorted(os.listdir(d))]
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+
+
+def properties_file_sets(key: str) -> bool:
+    """Whether a properties file that spark-submit reads sets ``key``: the
+    conf directory's ``spark-defaults.conf`` or a ``--properties-file`` in
+    ``PYSPARK_SUBMIT_ARGS``. A ``--conf`` from the session replaces such a
+    value whole."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    paths = [os.path.join(conf_dir, "spark-defaults.conf")]
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    for i, arg in enumerate(args):
+        if arg == "--properties-file" and i + 1 < len(args):
+            paths.append(args[i + 1])
+        elif arg.startswith("--properties-file="):
+            paths.append(arg.split("=", 1)[1])
+    # a java.util.Properties key ends at whitespace, `=` or `:`
+    line = re.compile(rf"^[ \t\f]*{re.escape(key)}(?=[\s=:]|$)", re.M)
+    for path in paths:
+        try:
+            with open(path) as f:
+                if line.search(f.read()):
+                    return True
+        except OSError:
+            pass
+    return False
 
 
 def _plan(conf: dict[str, str]) -> tuple[str, str] | None:

@@ -80,24 +80,34 @@ every knob is chosen so the same plan shapes survive a 1000-executor cluster:
   ``peak_rss_mb`` 1320 against 1495-1532 MB; one run without, two with).
 - ``JIT_OPTIONS`` lead ``spark.driver.defaultJavaOptions`` (the caller's
   options follow, so a flag the caller repeats wins; the CDS flags go in
-  front). They raise HotSpot's four C2 (tier-4) thresholds tenfold.
-  After the archive, C2 is the largest CPU consumer of a short job: about
-  10 of 22 driver-JVM CPU-s in a measured ``star_etl`` pass of the repo
-  benchmark, against 4.5 s of executor tasks. One ``-XX:+LogCompilation``
-  run put 13.7 C2 thread-seconds in that 7.2 s pass: generated classes
-  3.9, JDK 2.2, Catalyst 1.7, Java serialization 1.3, Spark core 1.2,
-  Scala 1.0, Parquet 1.0. Planning, Janino, serialization and Catalyst
-  tree code run thousands of times a pass, not millions, so with the
-  higher thresholds they stay at C1; per-row loops still cross 400,000
-  back-edges within one task and reach C2. In the pass, C2 fell to 1.8-2.0
-  CPU-s. Over ten alternating pairs of the repo benchmark (4 vCPUs,
+  front). Where ``spark-defaults.conf`` or a ``--properties-file`` in
+  ``PYSPARK_SUBMIT_ARGS`` sets that key and the caller does not, the
+  file's value stands alone: a ``--conf`` would replace it. They raise
+  HotSpot's four C2 (tier-4) thresholds tenfold. After the archive, C2 is
+  the largest CPU consumer of a short job. In the runs that planned this
+  change it took about 10 of 22 driver-JVM CPU-s in a measured
+  ``star_etl`` pass of the repo benchmark, against 4.5 s of executor
+  tasks, and one ``-XX:+LogCompilation`` run put 13.7 C2 thread-seconds
+  in that 7.2 s pass: generated classes 3.9, JDK 2.2, Catalyst 1.7, Java
+  serialization 1.3, Spark core 1.2, Scala 1.0, Parquet 1.0; with the
+  thresholds, C2 read 1.8-2.0 CPU-s in the pass. Planning, Janino,
+  serialization and Catalyst tree code run thousands of times a pass, not
+  millions, so they stay at C1. Per-row code also reaches C2 later. Over
+  ten alternating pairs of the repo benchmark per workload (4 vCPUs,
   JDK 17), ``cpu_s`` fell from 16.3 to 12.2 s on ``queries`` and from
-  21.5 to 16.6 s on ``star_etl`` (10/10 pairs each), while the wall-time
-  medians moved within noise: ``setup_s`` +5% on both, ``pass_s`` +7% and
-  +3.5%. sf0.1 throughput held in two rounds per side: q30 min
-  3.33/3.53 → 3.05/3.44 s and q335 min 15.8/15.3 → 15.2/14.7 s, first
-  runs no slower. One later pair read q242 slower (first run 14.9 → 16.8
-  s, min 5.6 → 6.0 s), not yet told apart from host noise. Measured and
+  21.5 to 16.6 s on ``star_etl`` (10/10 pairs each). The wall-time
+  medians leaned worse, each within its bound: ``setup_s`` +5% on both,
+  ``pass_s`` +7% and +3.5%, ``query_p90_s`` +6.5% on ``queries``, the
+  change winning 2-3 of 10 pairs. At sf0.1 (``tools/profile_query.py
+  --runs 3``, alternating pairs, medians) the two graph queries were
+  slower: q242 first run 14.9 → 16.8 s (slower in 4 of 5 pairs) with its
+  executor-task CPU 11.4 → 15.2 s, min 5.6 → 6.0 s (5 of 5); q335 first
+  run 25.8 → 29.4 s (4 of 7), min 14.4 → 15.0 s (6 of 7). Over 3 pairs
+  each, q30 read first run 12.1 → 12.9 s and min 2.7 → 2.4 s, q21 9.7 →
+  9.0 s and 1.8 → 1.6 s. Each median moved by less than the distance
+  between the parent's quartiles, on a host where q242's first run read
+  12.9-19.3 s at the parent alone. ``bench.py`` at sf0.1, two alternating
+  pairs: headline 52.2 → 53.7 s and 46.1 → 46.4 s. Measured and
   rejected: ``-XX:TieredStopAtLevel=1`` (no C2;
   ``cpu_s`` −42%, but sf0.1 q30 min 3.06 → 7.02 s and q335 16.7 → 27.8 s);
   the back-edge threshold left at its default (half the gain, and
@@ -175,8 +185,10 @@ def get_spark(
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         **(extra_conf or {}),
     }
-    # the caller's options follow, so any flag they repeat wins
-    conf[cds.DRIVER_OPTIONS] = f"{JIT_OPTIONS} {conf.get(cds.DRIVER_OPTIONS, '')}".strip()
+    # the caller's options follow, so any flag they repeat wins; options a
+    # properties file sets are left alone, as a --conf would replace them
+    if cds.DRIVER_OPTIONS in conf or not cds.properties_file_sets(cds.DRIVER_OPTIONS):
+        conf[cds.DRIVER_OPTIONS] = f"{JIT_OPTIONS} {conf.get(cds.DRIVER_OPTIONS, '')}".strip()
     with cds.driver_launch(conf):
         builder = SparkSession.builder.master(master).appName(app_name)
         for k, v in conf.items():

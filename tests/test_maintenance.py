@@ -431,26 +431,30 @@ def test_plan_normalizer_cut_filter_list():
     """A scan cuts a long filter list at a fixed raw length, so longer
     expression ids move the cut (q30 at sf0.01, a session's first run
     against later ones). Both cuts hash alike; a change elsewhere in the
-    scan still moves the md5, and a whole list is kept."""
+    scan still moves the md5, and so does a change inside a cut
+    PartitionFilters list, whose predicates the scan alone prints."""
     from tools.profile_query import normalized_plan, plan_md5
 
-    def scan(ids, cut, fmt="Parquet"):
+    def scan(ids, cut, fmt="Parquet", part="p"):
         a, b = ids
         return (
             f"+- FileScan parquet [l_shipdate#{a},l_returnflag#{b}] Batched: true, "
             f"DataFilters: [isnotnull(l_shipdate#{a}), (l_shipdate#{a} <= 2001-06-01 00:00:00), "
             f"isnotnull(l_returnflag#{b}),{cut}..., Format: {fmt}, "
             "Location: InMemoryFileIndex(1 paths)[file:/data/lineitem.parquet], "
-            f"PartitionFilters: [isnotnull(p#{a})], PushedFilters: [IsNotNull(l_shipdate)], "
+            f"PartitionFilters: [isnotnull({part}#{a}), ({part}#{a} >= 2001-01-01), "
+            f"({part}#{a} <= 2001-06-01), isnotnull(q#{b}),..., "
+            "PushedFilters: [IsNotNull(l_shipdate)], "
             "ReadSchema: struct<l_shipdate:timestamp_ntz,l_returnflag:string>"
         )
 
     md5 = plan_md5(_fake_plan_df(scan((61, 66), " isn")))
     assert plan_md5(_fake_plan_df(scan((1061, 1066), ""))) == md5
     assert plan_md5(_fake_plan_df(scan((61, 66), " isn", fmt="ORC"))) != md5
+    assert plan_md5(_fake_plan_df(scan((61, 66), " isn", part="d"))) != md5
     out = normalized_plan(_fake_plan_df(scan((61, 66), " isn")))
     assert "DataFilters: ..., Format: Parquet" in out
-    assert "PartitionFilters: [isnotnull(p#x)]" in out
+    assert "PartitionFilters: [isnotnull(p#x), (p#x >= 2001-01-01)," in out
 
 
 def test_gemm_cosine_twin_matches_hof_path(spark):

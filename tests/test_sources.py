@@ -478,7 +478,9 @@ def test_cds_corrupt_archive_falls_back(tmp_path):
 
 def test_cds_skipped_with_real_spark_defaults(tmp_path):
     """A Spark home whose conf directory holds a real spark-defaults.conf
-    launches without CDS, and the file's setting takes effect."""
+    launches without CDS, and the file's settings take effect: its
+    default Java options too, which the session's C2 thresholds would
+    otherwise replace."""
     from pyspark.find_spark_home import _find_spark_home
 
     home = tmp_path / "spark-home"
@@ -487,12 +489,40 @@ def test_cds_skipped_with_real_spark_defaults(tmp_path):
     for name in os.listdir(spark_home):
         if name != "conf":
             os.symlink(os.path.join(spark_home, name), home / name)
-    (home / "conf" / "spark-defaults.conf").write_text("spark.capstone.probe  42\n")
+    (home / "conf" / "spark-defaults.conf").write_text(
+        "spark.capstone.probe  42\nspark.driver.defaultJavaOptions -Dcapstone.probe=1\n"
+    )
     result, out, err = _cds_session(tmp_path / "cache", env={"SPARK_HOME": str(home)})()
     assert result["answer"] == 499500
     assert result["flags"] == []
     assert result["probe"] == "42"
+    assert result["jvm_probe"] == "1"
+    assert result["jit"]["Tier4InvocationThreshold"] != _JIT_DEFAULTS["Tier4InvocationThreshold"]
     assert not os.path.exists(_cds_dir(tmp_path / "cache"))
+
+
+def test_properties_file_sets(tmp_path, monkeypatch):
+    """Which keys a properties file spark-submit reads sets: a key line in
+    the conf directory's spark-defaults.conf or in a --properties-file of
+    PYSPARK_SUBMIT_ARGS, not a comment or a longer key."""
+    from data_engineer_capstone_spark import cds
+
+    key = "spark.driver.defaultJavaOptions"
+    (tmp_path / "spark-defaults.conf").write_text(
+        f"# {key} -Da=1\n{key}Extra -Da=1\nspark.x=1\n"
+    )
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    assert not cds.properties_file_sets(key)
+    assert cds.properties_file_sets("spark.x")
+    for sep in (" ", "=", ":", "\t"):
+        (tmp_path / "props").write_text(f"  {key}{sep}-Da=1\r\n")
+        monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", f"--properties-file {tmp_path / 'props'} pyspark-shell")
+        assert cds.properties_file_sets(key), repr(sep)
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", f"--properties-file={tmp_path / 'props'} pyspark-shell")
+    assert cds.properties_file_sets(key)
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", f"--properties-file {tmp_path / 'gone'} pyspark-shell")
+    assert not cds.properties_file_sets(key)
 
 
 def test_cds_one_recorder_for_concurrent_first_sessions(tmp_path):

@@ -69,10 +69,12 @@ def normalized_plan(df) -> str:
     # expression ids, so where ids come before it, their digit count moves
     # it (observed on q30 at sf0.01: `isnotnull(l_returnflag#x), isn...`
     # in a session's first run, `isnotnull(l_returnflag#x),...` in later
-    # runs, whose ids are longer). Drop the text of a cut filter list; the
-    # Filter node above the scan still prints the same predicates whole.
+    # runs, whose ids are longer). Drop the text of a cut DataFilters list:
+    # the Filter node above the scan still prints those predicates whole.
+    # PartitionFilters are kept, cut or not: the planner takes them out of
+    # that Filter, so the scan is the only place a change to them shows.
     plan = re.sub(
-        r"\b((?:Data|Partition)Filters: )(?:(?!, \w+: ).)*?\.\.\.(?=, \w+: |$)",
+        r"\b(DataFilters: )(?:(?!, \w+: ).)*?\.\.\.(?=, \w+: |$)",
         r"\1...",
         plan,
         flags=re.M,
