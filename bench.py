@@ -31,6 +31,7 @@ os.environ["SPARK_GRAFT_TABLE_CACHE"] = "off"
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from data_engineer_capstone_spark.catalog import DEFAULT_SF_DIR
 from data_engineer_capstone_spark.plans import get_queries
 from data_engineer_capstone_spark.session import get_spark
 
@@ -149,7 +150,7 @@ def _time_pipeline_once(spark) -> float:
 # noise (total 55.58 -> 54.24 s with q224 itself +1.1 s WORSE); the creep
 # is not block-manager litter. Evidence in BASELINE.md round-7 note.
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     spark = get_spark(app_name="bench")
     registry = get_queries()
     names = [n for n in HEADLINE if n in registry]

@@ -435,9 +435,10 @@ def common_neighbor_counts(
     Spill-aware sizing (round 7): the wedge stream is Σ d(d-1)/2 rows —
     ~124× the edge list on the sf0.1 co-purchase graph — so at the
     session's shuffle width each task's aggregation state is O(wedges/
-    partitions), and `tools/shuffle_audit.py` measured the sort-fallback
+    partitions), and the round-7 shuffle audit measured the sort-fallback
     cost of ignoring that: 24.3 GiB memory / 1.8 GiB disk spilled at
-    sf0.1. The operator therefore sizes its own exchanges from the data:
+    sf0.1 (a run's spill bytes now come from `tools/profile_query.py`).
+    The operator therefore sizes its own exchanges from the data:
     one O(1) scalar job on the (materialized) edge list computes the
     exact wedge count from the degree histogram, and both the wedge join
     and the pair aggregate run at ``wedges / 750k``

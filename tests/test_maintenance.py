@@ -98,7 +98,22 @@ def test_clean_checkpoints_conf_set(spark):
     )
 
 
-def test_profile_query_single_run(spark, capsys, monkeypatch):
+def _profile_query(*args: str) -> str:
+    """Stdout of ``tools/profile_query.py`` run in its own process: it
+    stops its session, so it cannot share the test session."""
+    import subprocess
+    import sys as _sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [_sys.executable, os.path.join(root, "tools", "profile_query.py"), *args],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    return done.stdout
+
+
+def test_profile_query_single_run():
     """ADVICE r6 #3: --runs 1 used to crash on min() of the empty
     post-warmup list; it must now degrade to a warmup-only summary."""
     import sys as _sys
@@ -107,21 +122,9 @@ def test_profile_query_single_run(spark, capsys, monkeypatch):
     _sys.path.insert(0, os.path.join(root, "tools"))
     import profile_query
 
-    monkeypatch.setattr(
-        _sys,
-        "argv",
-        [
-            "profile_query.py",
-            "q01_full_scan",
-            "--runs",
-            "1",
-            "--sf",
-            "/root/testdata/sf0.001",
-            "--count-only",
-        ],
-    )
-    profile_query.main()
-    out = capsys.readouterr().out
+    from tests.conftest import SF_SMOKE
+
+    out = _profile_query("q01_full_scan", "--runs", "1", "--sf", SF_SMOKE, "--count-only")
     assert "warmup" in out
     assert "min/median n/a" in out
     # the run's driver-JVM CPU split by thread group
@@ -142,6 +145,66 @@ def test_profile_query_single_run(spark, capsys, monkeypatch):
         "Thread-12": "py4j", "VM Thread": None, "Thread-12-x": None,
     }
     assert {c: profile_query.thread_group(c) for c in groups} == groups
+
+
+def test_profile_query_layer_records(tmp_path):
+    """Each run of each named query gets its execution record from the
+    event log: its own jobs, no failed task, and the shuffle bytes of its
+    plan, the same in every run."""
+    import json
+
+    from tests.conftest import SF_SMOKE
+
+    out = tmp_path / "layers.json"
+    names = ["q30_tpch_q1_agg", "q01_full_scan"]
+    stdout = _profile_query(
+        *names, "--runs", "2", "--count-only", "--sf", SF_SMOKE, "--out", str(out)
+    )
+    report = json.loads(out.read_text())
+    assert report["sf"] == SF_SMOKE
+    runs = report["runs"]
+    assert [(r["query"], r["run"]) for r in runs] == [(n, i) for n in names for i in range(2)]
+    fields = {
+        "sec", "compiles", "plan_md5", "jit_compile_s", "jvm_cpu_s", "jobs", "stages", "tasks",
+        "failed_tasks", "cpu_s", "run_s", "gc_s", "shuffle_read_bytes", "shuffle_write_bytes",
+        "spill_bytes", "task_skew", "byte_skew", "median0_stages",
+    }
+    for r in runs:
+        assert fields <= set(r), r
+        assert r["jobs"] > 0 and r["failed_tasks"] == 0, r
+        assert f"{r['query']} run {r['run']}: jobs {r['jobs']} " in stdout
+    q30 = [r["shuffle_write_bytes"] for r in runs if r["query"] == "q30_tpch_q1_agg"]
+    assert q30[0] > 0 and q30[0] == q30[1]
+
+    # byte skew: a stage whose median task moved no bytes has no ratio
+    from tools.profile_query import byte_skew
+
+    def task(stage, read, write, job=1):
+        return {"job": job, "stage": (stage, 0), "sh_read": read, "sh_write": write}
+
+    log = {"tasks": [
+        task(0, 0, 0), task(0, 0, 0), task(0, 5, 0),
+        task(1, 0, 10), task(1, 0, 30), task(1, 0, 20),
+        task(2, 1, 1), task(2, 900, 1, job=2),
+    ]}
+    assert byte_skew(log, {1}) == (1.5, 1)
+    assert byte_skew(log, {3}) == (1.0, 0)
+
+
+def test_tools_named_in_docs_exist():
+    """Every ``tools/<name>.py`` the README and the verify notes point at
+    is in the tree."""
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    docs = ["README.md", os.path.join(".claude", "skills", "verify", "SKILL.md")]
+    named = {
+        tool
+        for doc in docs
+        for tool in re.findall(r"tools/(\w+)\.py", open(os.path.join(root, doc)).read())
+    }
+    assert named
+    assert sorted(t for t in named if not os.path.isfile(os.path.join(root, "tools", f"{t}.py"))) == []
 
 
 def test_expansion_partitions_policy(spark):
@@ -291,92 +354,6 @@ def test_split_schema_rejects_unbalanced_brackets():
         ("a", "decimal(10,2)"),
         ("b", "map<string,int>"),
     ]
-
-
-def test_stages_settled_status(monkeypatch):
-    """ADVICE r8 + r9 #1: _stages_settled returns a three-way status —
-    only growth-settled attribution is trusted; a stage-free early exit
-    is distinguishable from growth (the r8 boolean flagged both True, so
-    a listener bus slower than the ~1.2 s no-growth window produced a
-    trusted-looking zero-stage row while its stages leaked into the next
-    query's row)."""
-    import tools.shuffle_audit as sa
-
-    # (a) growth then stability -> trusted, quickly
-    seq = iter([{(0, 0): {}}, {(0, 0): {}, (1, 0): {}}, {(0, 0): {}, (1, 0): {}}])
-    monkeypatch.setattr(sa, "_stages", lambda ui, app: next(seq))
-    monkeypatch.setattr(sa.time, "sleep", lambda s: None)
-    stages, status = sa._stages_settled("u", "a", seen={(0, 0)})
-    assert status == "grew" and (1, 0) in stages
-
-    # (b) stage-free query: stable with no growth -> distinguishable
-    # "stage_free" marker after stable_needed polls, short of the bound
-    calls = {"n": 0}
-
-    def _static(ui, app):
-        calls["n"] += 1
-        return {(0, 0): {}}
-
-    monkeypatch.setattr(sa, "_stages", _static)
-    stages, status = sa._stages_settled("u", "a", seen={(0, 0)})
-    assert status == "stage_free" and calls["n"] <= 12
-
-    # (c) the r9 advisor scenario: stages register on the listener bus
-    # AFTER the old 5-poll (~1.2 s) early-exit window — the widened
-    # no-growth window must catch the growth and report it as trusted
-    late = {"n": 0}
-
-    def _late(ui, app):
-        late["n"] += 1
-        return {(0, 0): {}, (1, 0): {}} if late["n"] > 7 else {(0, 0): {}}
-
-    monkeypatch.setattr(sa, "_stages", _late)
-    stages, status = sa._stages_settled("u", "a", seen={(0, 0)})
-    assert status == "grew" and (1, 0) in stages
-
-    # (d) never stabilizes -> bound hit
-    grow = {"n": 0}
-
-    def _growing(ui, app):
-        grow["n"] += 1
-        return {(i, 0): {} for i in range(grow["n"])}
-
-    monkeypatch.setattr(sa, "_stages", _growing)
-    stages, status = sa._stages_settled("u", "a", seen=set(), polls=5)
-    assert status == "bound_hit"
-
-
-def test_stage_skew_clamped_bucket(monkeypatch):
-    """ADVICE r8: median~0 clamped figures go to clampedRatios, never into
-    bytesRatio where they would outrank true max/median ratios."""
-    import io
-    import json as _json
-
-    import tools.shuffle_audit as sa
-
-    summ = {
-        "executorRunTime": [100, 200],
-        "shuffleReadMetrics": {"readBytes": [500, 5 * 1024 * 1024]},
-        "shuffleWriteMetrics": {"writeBytes": [10 * 1024, 100 * 1024]},
-    }
-
-    class _Resp(io.BytesIO):
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    monkeypatch.setattr(
-        sa.urllib.request,
-        "urlopen",
-        lambda url, timeout=30: _Resp(_json.dumps(summ).encode()),
-    )
-    sk = sa._stage_skew("u", "a", {"stageId": 3, "attemptId": 0, "numTasks": 16})
-    # write has a true ratio 10x; read is median~0 and must NOT win bytesRatio
-    assert sk["bytesRatio"] == 10.0
-    assert "read" in sk["clampedRatios"] and "read" not in sk["bytesRatios"]
-    assert sk["flags"] == ["read:median~0"]
 
 
 def _fake_plan_df(plan: str):

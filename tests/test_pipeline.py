@@ -41,6 +41,32 @@ def test_build_all_and_write_lake(spark, tmp_path):
         df.unpersist()
 
 
+def test_write_lake_jobs_carry_callers_job_group(spark, tmp_path):
+    """write_lake submits its writes from pool threads; each of their jobs
+    runs under the caller's job group, and none runs ungrouped."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tables = build.build_all(spark)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "write-lake-group"
+    first = jsc.dagScheduler().numTotalJobs()
+    sc.setJobGroup(group, "write lake", interruptOnCancel=False)
+    try:
+        build.write_lake(tables, str(tmp_path / "lake"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ran = set(range(first, jsc.dagScheduler().numTotalJobs()))
+    jsc.listenerBus().waitUntilEmpty()
+    assert len(ran) >= len(tables)
+    assert set(tracker.getJobIdsForGroup(group)) == ran
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    for df in tables.values():
+        df.unpersist()
+
+
 def test_cli_end_to_end(spark, tmp_path, capsys):
     """python -m data_engineer_capstone_spark: gates pass, lake written."""
     from data_engineer_capstone_spark.__main__ import main

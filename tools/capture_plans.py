@@ -16,6 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_engineer_capstone_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from data_engineer_capstone_spark.plans import get_queries  # noqa: E402
 from data_engineer_capstone_spark.session import get_spark  # noqa: E402
 
@@ -25,7 +26,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--tag", default="r11")
     ap.add_argument("--suffix", default="before")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
     args = ap.parse_args()
 
     out_dir = os.path.join(

@@ -36,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_engineer_capstone_spark.catalog import load_table  # noqa: E402
+from data_engineer_capstone_spark.catalog import DEFAULT_SF_DIR, load_table  # noqa: E402
 from data_engineer_capstone_spark.operators.similarity import (  # noqa: E402
     cosine_pairs,
 )
@@ -133,9 +133,7 @@ def canon(df):
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
     spark = get_spark(app_name="experiment-gemm-cosine")
     emb = load_table(spark, sf_dir, "embeddings")
 

@@ -1,28 +1,46 @@
-"""Standalone drift-investigation profiler (the BASELINE.md q21/q276
-protocol, now a committed tool instead of an ad-hoc snippet).
+"""Per-query profiler: runs registered queries N times each in one fresh
+session at a given SF (the BASELINE.md q21/q276 drift protocol) and
+reports each run layer by layer.
 
-Runs ONE registered query N times in a fresh session at a given SF and
-prints, per run: wall time, the number of Janino compiles of generated
-code (the JVM's CodegenMetrics delta), the md5 of the NORMALIZED
-executed plan (AQE final plan, expression/plan ids and temp paths
-stripped) and the driver JVM's CPU-seconds split by thread group, read
-from ``/proc/<jvm pid>/task/*/{comm,stat}``: the C2 and C1 JIT compiler
-threads, executor task threads, GC threads, the Py4J gateway threads
-(unnamed ``Thread-N``, where the query's planning runs) and the rest
-(including threads that exited during the run), and beside it the
+Per run, while the session is up, one line: wall time, the number of
+Janino compiles of generated code (the JVM's CodegenMetrics delta), the
+md5 of the NORMALIZED executed plan (AQE final plan, expression/plan ids
+and temp paths stripped) and the driver JVM's CPU-seconds split by thread
+group, read from ``/proc/<jvm pid>/task/*/{comm,stat}``: the C2 and C1 JIT
+compiler threads, executor task threads, GC threads, the Py4J gateway
+threads (unnamed ``Thread-N``, where the query's planning runs) and the
+rest (including threads that exited during the run), and beside it the
 JVM's own JIT compile time (``CompilationMXBean`` total, which still
 counts a compiler thread that the JVM retired, while its CPU lands in
-``other``). A descending time
-curve onto a stable floor with an unchanged plan hash and no compiles
-after the first run = JIT/scheduler warm-up (environment), not plan
-cost; compiles in every run = generated code recompiled (codegen cache
-too small, or source that differs per run); a changed hash or a
-flat-but-slower curve = a real regression.
+``other``). A descending time curve onto a stable floor with an unchanged
+plan hash and no compiles after the first run = JIT/scheduler warm-up
+(environment), not plan cost; compiles in every run = generated code
+recompiled (codegen cache too small, or source that differs per run); a
+changed hash or a flat-but-slower curve = a real regression.
+
+Execution layers come from the engine's own record: the session writes
+its event log (uncompressed, to a temporary directory) and each run
+carries its own job group. After the session stops, the log is read with
+``perfbench/layers.py`` (Spark names the file ``<app>.inprogress`` until
+then) and each run gets a second line: jobs, stages, tasks and failed
+tasks; executor CPU, run and GC seconds; shuffle read, shuffle write and
+spill bytes (memory and disk spill summed); ``skew time``, the slowest
+task over the median task of the stage holding the run's slowest task,
+which shared-host load moves; and ``skew bytes``, the load-independent
+signal: the largest max/median of shuffle bytes per task over the run's
+stages, read and write apart. A stage whose median task moved no bytes
+while another task did has no ratio; it is counted in ``median0`` instead.
+Bytes follow from plan and data, so repeated runs mostly reproduce them
+exactly (q388's iterative HITS moved by up to 3% between runs at sf0.1);
+CPU-seconds move with host load. ``--out`` writes every run's record as
+JSON.
 
 Usage:
     python tools/profile_query.py q30_tpch_q1_agg --runs 8
     python tools/profile_query.py q335_triangle_count --runs 8 \
         --sf /root/testdata/sf0.1
+    python tools/profile_query.py q30_tpch_q1_agg q242_common_neighbors \
+        --runs 2 --count-only --out artifacts/layers_<tag>.json
 """
 
 from __future__ import annotations
@@ -31,15 +49,21 @@ import argparse
 import collections
 import difflib
 import hashlib
+import json
 import os
 import re
+import shutil
+import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_engineer_capstone_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from data_engineer_capstone_spark.plans import get_queries  # noqa: E402
 from data_engineer_capstone_spark.session import get_spark  # noqa: E402
+from perfbench.layers import attribute_jobs, exec_metrics, parse_event_log  # noqa: E402
 
 
 def normalized_plan(df) -> str:
@@ -174,35 +198,45 @@ def thread_split(before, after) -> collections.Counter:
     return cpu
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("name")
-    ap.add_argument("--runs", type=int, default=8)
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument(
-        "--count-only",
-        action="store_true",
-        help="drive the plan with count() instead of collect() (wide results)",
-    )
-    ap.add_argument(
-        "--dump-plan",
-        action="store_true",
-        help="print the full normalized executed plan of the last run, and a"
-        " diff of the normalized plans wherever the md5 moves between runs",
-    )
-    args = ap.parse_args()
+def byte_skew(log: dict, jobs: set[int]) -> tuple[float, int]:
+    """(largest max/median shuffle bytes per task over the stages of
+    ``jobs``, read and write apart; stages whose median task moved no bytes
+    while another task did). Those stages have no ratio: the median is
+    never a divisor when it is 0. 1.0 when no stage has two tasks."""
+    per_task = collections.defaultdict(list)
+    for t in log["tasks"]:
+        if t["job"] in jobs:
+            per_task[t["stage"], "read"].append(t["sh_read"])
+            per_task[t["stage"], "write"].append(t["sh_write"])
+    skew, median0 = 1.0, set()
+    for (stage, _), moved in per_task.items():
+        if len(moved) < 2 or not max(moved):
+            continue
+        median = statistics.median(moved)
+        if median:
+            skew = max(skew, max(moved) / median)
+        else:
+            median0.add(stage)
+    return skew, len(median0)
 
-    spark = get_spark(app_name=f"profile-{args.name}")
-    fn = get_queries()[args.name]
+
+def profile(spark, name: str, args, windows: list[dict]) -> list[dict]:
+    """Run one query ``args.runs`` times, printing a line per run; returns
+    the runs' records, with each run's job group window in ``windows``."""
+    fn = get_queries()[name]
+    sc = spark.sparkContext
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-    jvm_pid = spark.sparkContext._gateway.proc.pid
-    times, hashes, plans = [], [], []
+    jvm_pid = sc._gateway.proc.pid
+    groups = [g for g, _ in THREAD_GROUPS] + ["other"]
+    times, hashes, plans, records = [], [], [], []
     for i in range(args.runs):
         compiled = codegen.METRIC_COMPILATION_TIME().getCount()
         jit_ms = jit.getTotalCompilationTime()
         cpu = jvm_thread_cpu(jvm_pid)
-        t0 = time.time()
+        window = {"group": f"{name}:{i}", "phase": name}
+        sc.setJobGroup(window["group"], window["phase"])
+        window["t0"] = t0 = time.time()
         df = fn(spark, args.sf)
         df.count() if args.count_only else df.collect()
         times.append(time.time() - t0)
@@ -210,15 +244,20 @@ def main() -> None:
         jit_ms = jit.getTotalCompilationTime() - jit_ms
         compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
         plans.append(normalized_plan(df))
+        window["t1"] = time.time()
+        windows.append(window)
         hashes.append(_md5(plans[-1]))
-        split = " ".join(
-            f"{g} {cpu[g]:.2f}" for g in [g for g, _ in THREAD_GROUPS] + ["other"]
-        )
+        split = " ".join(f"{g} {cpu[g]:.2f}" for g in groups)
         print(
             f"run {i}: {times[-1]:.3f} s  compiles {compiled}  plan md5 {hashes[-1]}"
             f"  jvm cpu-s {split}  jit compile-s {jit_ms / 1000:.2f}",
             flush=True,
         )
+        records.append({
+            "query": name, "run": i, "sec": round(times[-1], 3), "compiles": compiled,
+            "plan_md5": hashes[-1], "jit_compile_s": jit_ms / 1000,
+            "jvm_cpu_s": {g: round(cpu[g], 2) for g in groups},
+        })
     timed = times[1:]
     if timed:
         stats = (
@@ -228,7 +267,7 @@ def main() -> None:
     else:  # --runs 1: only the warmup ran, nothing post-warmup to summarize
         stats = "min/median n/a (need --runs >= 2 for post-warmup stats)"
     print(
-        f"\n{args.name} @ {args.sf}: warmup {times[0]:.3f}; {stats}; "
+        f"\n{name} @ {args.sf}: warmup {times[0]:.3f}; {stats}; "
         f"plan stable: {len(set(hashes)) == 1} ({hashes[-1]})"
     )
     if args.dump_plan:
@@ -240,6 +279,66 @@ def main() -> None:
                     plans[i - 1].splitlines(), plans[i].splitlines(),
                     f"run {i - 1}", f"run {i}", lineterm="",
                 )))
+    return records
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="+")
+    ap.add_argument("--runs", type=int, default=8)
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
+    ap.add_argument(
+        "--count-only",
+        action="store_true",
+        help="drive the plan with count() instead of collect() (wide results)",
+    )
+    ap.add_argument(
+        "--dump-plan",
+        action="store_true",
+        help="print the full normalized executed plan of the last run, and a"
+        " diff of the normalized plans wherever the md5 moves between runs",
+    )
+    ap.add_argument("--out", default=None, help="write every run's record here as JSON")
+    args = ap.parse_args()
+
+    log_dir = tempfile.mkdtemp(prefix="profile-eventlog-")
+    try:
+        spark = get_spark(
+            app_name="profile_query",
+            extra_conf={
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": "file://" + log_dir,
+                "spark.eventLog.compress": "false",
+            },
+        )
+        app_id = spark.sparkContext.applicationId
+        windows, records = [], []
+        for name in args.names:
+            records += profile(spark, name, args, windows)
+        spark.stop()
+        log = parse_event_log(log_dir, app_id)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    owner = attribute_jobs(log, windows)
+    print()
+    for rec, window in zip(records, windows):
+        jobs = {j for j, w in owner.items() if w is window}
+        layers = exec_metrics(log, jobs)
+        layers["byte_skew"], layers["median0_stages"] = byte_skew(log, jobs)
+        rec.update((k, round(v, 3) if isinstance(v, float) else v) for k, v in layers.items())
+        print(
+            f"{rec['query']} run {rec['run']}: jobs {rec['jobs']} stages {rec['stages']}"
+            f" tasks {rec['tasks']} failed {rec['failed_tasks']}"
+            f"  exec cpu-s {rec['cpu_s']:.2f} run-s {rec['run_s']:.2f} gc-s {rec['gc_s']:.2f}"
+            f"  bytes shuffle read {rec['shuffle_read_bytes']} write {rec['shuffle_write_bytes']}"
+            f" spill {rec['spill_bytes']}"
+            f"  skew time {rec['task_skew']:.2f} bytes {rec['byte_skew']:.2f}"
+            f" median0 {rec['median0_stages']}"
+        )
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump({"sf": args.sf, "runs": records}, f, indent=1)
+        print(f"wrote {args.out}")
 
 
 if __name__ == "__main__":
